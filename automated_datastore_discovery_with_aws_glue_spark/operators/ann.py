@@ -57,11 +57,9 @@ from automated_datastore_discovery_with_aws_glue_spark.operators.similarity impo
     _lit_imatrix_sql,
     adc_from_lut_expr,
     adc_lut_expr,
-    as_double,
-    cosine,
+    cosine_lit_sql,
     kmeans_cell_expr,
     kmeans_centroids_int,
-    lit_vec,
     pq_cells_expr,
     pq_codebooks_int,
     probe_cells_expr,
@@ -195,7 +193,9 @@ class IvfVectorIndex:
         Memoized per resolved CENTROIDS version (committed versions are
         immutable — the store-read memoize argument): the ingest/topk
         recurring paths each collected the same k x d table as a fresh
-        Spark job per call."""
+        Spark job per call. The read uses the RESOLVED version, never
+        "latest" again, so a rebuild committing between the resolution
+        and the read cannot cache a newer matrix under an older key."""
         qv = self._quantizer_versions(vectors_version=vectors_version).get(
             "centroids"
         )
@@ -204,7 +204,7 @@ class IvfVectorIndex:
         if hit is not None:
             return hit
         rows = (
-            self.store.read(CENTROIDS, version=qv).orderBy("cell", "pos").collect()
+            self.store.read(CENTROIDS, version=key).orderBy("cell", "pos").collect()
         )
         cents: dict[int, dict[int, int]] = {}
         for r in rows:
@@ -236,7 +236,7 @@ class IvfVectorIndex:
         hit = self._quantizer_cache.get(("book", key))
         if hit is not None:
             return hit
-        rows = self.store.read(CODEBOOKS, version=qv).collect()
+        rows = self.store.read(CODEBOOKS, version=key).collect()
         acc: dict[int, dict[int, dict[int, int]]] = {}
         for r in rows:
             acc.setdefault(r["j"], {}).setdefault(r["cell"], {})[r["pos"]] = r["c"]
@@ -1150,22 +1150,39 @@ class IvfVectorIndex:
         (cosine with no direction is undefined — and an ANSI
         divide-by-zero).
 
+        The plan is read -> where -> selectExpr -> orderBy -> limit. The
+        one ``where`` carries both the cell probe and the zero-norm
+        filter; the score is ONE SQL string from
+        :func:`~automated_datastore_discovery_with_aws_glue_spark.operators.similarity.cosine_lit_sql`:
+        the stored norm is one fold text shared by the filter and the
+        denominator, and the query norm is folded on the driver in the
+        same IEEE order and enters as an exact double literal. Every
+        emitted ``similarity`` is therefore bit-identical to
+        ``round(cosine(as_double(vec), lit_vec(query)), 4)``, while the
+        plan costs a few dozen py4j round trips to build instead of the
+        ~460 of the equivalent Column tree — on a serving path the
+        per-query driver overhead, not the scan, is most of the latency.
+
         ``mode='exact'`` scores every probed vector at full precision.
         ``mode='adc'`` (r10, needs ``pq_m``) scores the probed cells
         with the per-query ASYMMETRIC-DISTANCE lookup table instead —
         m integer lookups per vector against the stored codes, no
         arithmetic on the vector — keeps the ``k * rerank_factor``
-        ADC-best, and re-ranks only those at full precision (the
-        `knn_ivf_pq_scored` math against the persisted index). Same
-        exactness contract as the q8 tier: quantization can demote a
-        candidate out of the pool, never corrupt an emitted
-        similarity."""
+        ADC-best, and re-ranks only those through the same exact
+        scoring step (the `knn_ivf_pq_scored` math against the
+        persisted index). Same exactness contract as the q8 tier:
+        quantization can demote a candidate out of the pool, never
+        corrupt an emitted similarity."""
         v = self._read_snapshot_version()
         cents = self.quantizer(vectors_version=v)
         qv = np.asarray(query, dtype=float)
         probes = [int(p) for p in np.argsort(-(cents @ qv))[: n_probe]]
-        probed = self.store.read(VECTORS, version=v).filter(
-            F.col("_cell").isin(probes)
+        score, norm = cosine_lit_sql(self.vec_col, query)
+        # zero-norm rows are stored but never scored; the ADC path
+        # excludes them BEFORE the rerank cut or they would occupy
+        # candidate slots
+        probed = self.store.read(VECTORS, version=v).where(
+            f"`_cell` IN ({', '.join(map(str, probes))}) AND {norm} > 0"
         )
         if mode == "adc":
             if not self.pq_m:
@@ -1185,39 +1202,22 @@ class IvfVectorIndex:
                 ]
                 for j in range(m)
             ]
-            adc = F.expr(
+            adc = (
                 f"aggregate(transform(sequence(0, {m - 1}), j -> "
                 f"element_at(element_at({_lit_imatrix_sql(lut)}, j + 1), "
                 f"element_at(`_codes`, j + 1) + 1)), CAST(0 AS BIGINT), "
                 f"(a, b) -> a + b)"
             )
-            # zero-norm rows are stored but never scored; exclude them
-            # BEFORE the rerank cut or they occupy candidate slots that
-            # the later norm filter then discards (code-review r10)
-            cand_ids = (
-                probed.withColumn("_n0", sq_norm_expr(self.vec_col))
-                .filter(F.col("_n0") > 0)
-                .select(self.id_col, adc.alias("_adc"))
-                .orderBy(F.col("_adc").asc(), F.col(self.id_col))
+            cand = (
+                probed.selectExpr(f"`{self.id_col}`", f"{adc} AS _adc")
+                .orderBy("_adc", self.id_col)
                 .limit(k * rerank_factor)
             )
-            probed = probed.join(F.broadcast(cand_ids.select(self.id_col)), self.id_col)
+            probed = probed.join(F.broadcast(cand), self.id_col)
         elif mode != "exact":
             raise ValueError(f"topk: unknown mode {mode!r} (exact | adc)")
         return (
-            probed
-            .withColumn("_nrm", sq_norm_expr(self.vec_col))
-            .filter(F.col("_nrm") > 0)
-            .select(
-                F.col(self.id_col),
-                F.round(
-                    cosine(
-                        as_double(F.col(self.vec_col)),
-                        lit_vec([float(x) for x in query]),
-                    ),
-                    4,
-                ).alias("similarity"),
-            )
-            .orderBy(F.col("similarity").desc(), F.col(self.id_col))
+            probed.selectExpr(f"`{self.id_col}`", f"round({score}, 4) AS similarity")
+            .orderBy(F.desc("similarity"), self.id_col)
             .limit(k)
         )

@@ -27,6 +27,8 @@ the DuckDB oracle's list_cosine_similarity.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -59,8 +61,12 @@ def lit_vec(values: list[float]) -> Column:
     CONSTRUCTION (not execution) the dominant cost of the LSH operators
     (~8s of driver time). Python float repr round-trips exactly through
     Java's Double.parseDouble, so values are bit-identical either way."""
+    return F.expr(_lit_vec_sql(values))
+
+
+def _lit_vec_sql(values: list[float]) -> str:
     inner = ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in values)
-    return F.expr(f"array({inner})")
+    return f"array({inner})"
 
 
 def _norm(a: Column) -> Column:
@@ -86,7 +92,7 @@ def as_double(vec: Column) -> Column:
 def brute_force_topk(
     df: DataFrame,
     vec_col: str,
-    query: list[float] | Column,
+    query: list[float],
     k: int = 10,
     *,
     id_col: str = "vec_id",
@@ -95,12 +101,13 @@ def brute_force_topk(
 
     Executes as scan -> projection -> TakeOrderedAndProject: no shuffle,
     no global sort materialization; each partition keeps k rows.
-    Rounded similarity + id tiebreak make the ordering total."""
-    q = query if isinstance(query, Column) else lit_vec(list(query))
-    sim = F.round(cosine(as_double(F.col(vec_col)), q), 4)
+    Rounded similarity + id tiebreak make the ordering total. The score
+    is :func:`cosine_lit_sql`, the one exact-cosine-against-a-literal
+    implementation (shared with ``IvfVectorIndex.topk``)."""
+    score, _nrm = cosine_lit_sql(vec_col, query)
     return (
-        df.select(F.col(id_col), sim.alias("similarity"))
-        .orderBy(F.col("similarity").desc(), F.col(id_col))
+        df.selectExpr(f"`{id_col}`", f"round({score}, 4) AS similarity")
+        .orderBy(F.desc("similarity"), id_col)
         .limit(k)
     )
 
@@ -928,10 +935,50 @@ def sq_norm_expr(vec_col: str) -> Column:
     """sqrt of the left-to-right fold of squared components — transform
     THEN aggregate, the exact shape DuckDB's list_transform + list_sum
     folds in the same order."""
-    return F.expr(
+    return F.expr(_sq_norm_sql(vec_col))
+
+
+def _sq_norm_sql(vec_col: str) -> str:
+    return (
         f"sqrt(aggregate(transform(`{vec_col}`, x -> CAST(x AS DOUBLE) * "
         f"CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
     )
+
+
+def cosine_lit_sql(vec_col: str, query: list[float]) -> tuple[str, str]:
+    """Exact cosine of ``vec_col`` against one literal query vector as
+    SQL text: ``(score, norm)``, where ``norm`` is the stored vector's
+    norm (:func:`sq_norm_expr`'s fold) — the caller's zero-norm filter
+    and the score's denominator use this one string, so they agree
+    bit-for-bit.
+
+    The score is ``dot / (norm * qnorm)``, the same expression tree as
+    :func:`cosine` over ``as_double(vec)`` and :func:`lit_vec` — each
+    fold left to right from 0.0, so every value is bit-identical:
+
+    - ``dot`` folds ``acc + x * y`` over ``zip_with``, like :func:`dot`;
+    - ``norm`` folds ``acc + x * x``; squaring each component before
+      the fold equals ``dot(v, v)`` term by term;
+    - ``qnorm`` is folded on the driver in the same IEEE order
+      (``acc = acc + x * x``, then ``math.sqrt``, correctly rounded like
+      Java's ``Math.sqrt``) and enters as a ``CAST('<repr>' AS DOUBLE)``
+      literal, which round-trips exactly (see :func:`lit_vec`).
+
+    A zero-norm query makes ``norm * 0.0`` a zero divisor: an ANSI
+    divide-by-zero (NULL with ANSI off), exactly as :func:`cosine`. As
+    one string the score costs a handful of py4j round trips to plan,
+    where the equivalent Column tree costs hundreds."""
+    q = [float(x) for x in query]
+    acc = 0.0
+    for x in q:
+        acc = acc + x * x
+    v = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    dot_sql = (
+        f"aggregate(zip_with({v}, {_lit_vec_sql(q)}, (x, y) -> x * y), "
+        f"CAST(0.0 AS DOUBLE), (a, b) -> a + b)"
+    )
+    norm = _sq_norm_sql(vec_col)
+    return f"{dot_sql} / ({norm} * CAST('{math.sqrt(acc)!r}' AS DOUBLE))", norm
 
 
 def kmeans_cell_expr(qvec_col: str, cents: list[list[int]]) -> Column:

@@ -33,3 +33,25 @@ def spark(tmp_path_factory):
         },
     )
     yield spark
+
+
+@pytest.fixture
+def codegen(spark):
+    """The production execution path for one test: whole-stage codegen
+    on and the default expression factory mode (compile, interpreted
+    fallback), set at runtime on the shared session and restored
+    afterwards. The session above runs interpreted, so without this no
+    test compiles the engine's generated expressions (literal matrices,
+    higher-order folds) through Janino."""
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    spark.conf.set("spark.sql.codegen.wholeStage", "true")
+    spark.conf.unset("spark.sql.codegen.factoryMode")
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -631,6 +631,146 @@ def test_quantizer_pinned_to_vectors_version(spark, tmp_path):
     assert ix.topk(rows[3][1], 3, n_probe=2).count() == 3
 
 
+def test_quantizer_cache_reads_the_resolved_version(spark, tmp_path):
+    """When the vectors carry no quantizer pin (a legacy version), the
+    memo key is the latest CENTROIDS / CODEBOOKS version at resolution
+    time. A rebuild that commits new quantizer tables between that
+    resolution and the read must not get its NEWER matrix cached under
+    the OLDER key — the read uses the resolved version."""
+    import os
+
+    from automated_datastore_discovery_with_aws_glue_spark.operators.ann import CENTROIDS, CODEBOOKS
+
+    df, _rows = _corpus(spark, n=120, dim=8)
+    root = str(tmp_path / "ix")
+    kw = dict(n_cells=4, iterations=1, pq_m=4, pq_k=8)
+    IvfVectorIndex(spark, root, **kw).build(df)
+    ix = IvfVectorIndex(spark, root, **kw)
+    v = ix.store.latest_version("vectors")
+    os.remove(os.path.join(ix.store._version_dir("vectors", v), "_TABLE_META"))
+    assert ix._quantizer_versions() == {}  # unpinned: keys resolve to latest
+
+    clean = IvfVectorIndex(spark, root, **kw)
+    c_old, b_old = clean.centroids_int(), clean.codebooks_int()
+    c_key = ix.store.latest_version(CENTROIDS)
+    b_key = ix.store.latest_version(CODEBOOKS)
+    newer = {
+        CENTROIDS: spark.createDataFrame(
+            [(c, p, 999_999) for c in range(4) for p in range(8)],
+            "cell int, pos int, c bigint",
+        ),
+        CODEBOOKS: spark.createDataFrame(
+            [(j, c, p, 999_999) for j in range(4) for c in range(8) for p in range(2)],
+            "j int, cell int, pos int, c bigint",
+        ),
+    }
+    raced: set[str] = set()
+    resolve = ix.store.latest_version
+
+    def racing(table):
+        got = resolve(table)
+        if table in newer and table not in raced:
+            raced.add(table)  # a rebuild commits right after key resolution
+            ix.store.overwrite(table, newer[table])
+        return got
+
+    mp = pytest.MonkeyPatch()
+    try:
+        mp.setattr(ix.store, "latest_version", racing)
+        assert ix.centroids_int() == c_old
+        assert ix.codebooks_int() == b_old
+    finally:
+        mp.undo()
+    assert raced == {CENTROIDS, CODEBOOKS}
+    assert ix._quantizer_cache[("cent", c_key)] == c_old
+    assert ix._quantizer_cache[("book", b_key)] == b_old
+    # the rebuild's tables are the new latest, memoised under their own keys
+    assert ix.centroids_int() == [[999_999] * 8] * 4
+    assert ix.codebooks_int() == [[[999_999] * 2] * 8] * 4
+    assert ("cent", c_key + 1) in ix._quantizer_cache
+
+
+def _old_topk(ix, q, k, n_probe):
+    """Reference exact top-k: the Column-tree cosine over the probed
+    cells, with the zero-norm filter as its own step."""
+    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
+        as_double,
+        cosine,
+        lit_vec,
+        sq_norm_expr,
+    )
+
+    probes = [int(p) for p in np.argsort(-(ix.quantizer() @ np.asarray(q, dtype=float)))[:n_probe]]
+    return (
+        ix.vectors()
+        .filter(F.col("_cell").isin(probes))
+        .withColumn("_nrm", sq_norm_expr("embedding"))
+        .filter(F.col("_nrm") > 0)
+        .select(
+            F.col("vec_id"),
+            F.round(cosine(as_double(F.col("embedding")), lit_vec([float(x) for x in q])), 4).alias(
+                "similarity"
+            ),
+        )
+        .orderBy(F.col("similarity").desc(), F.col("vec_id"))
+        .limit(k)
+    )
+
+
+def _outcome(df):
+    """Rows, or the error condition when the query fails."""
+    try:
+        return [tuple(r) for r in df.collect()]
+    except Exception as e:  # noqa: BLE001 — the failure IS the outcome
+        return ("error", e.getCondition() if hasattr(e, "getCondition") else type(e).__name__)
+
+
+def test_topk_single_expression_matches_column_formula(spark, tmp_path):
+    """topk scores with one SQL string (driver-folded query norm, one
+    shared stored-norm fold); every (vec_id, similarity) must equal the
+    Column-tree formula round(cosine(as_double(v), lit_vec(q)), 4) over
+    the probed cells — bit for bit, ties and zero-norm rows included —
+    a zero-norm query must fail (or not) exactly as the Column formula
+    does, and _cell must stay a PartitionFilter."""
+    df, rows = _corpus(spark, n=160, dim=8, seed=5)
+    extra = [(1000 + i, rows[i % 4][1]) for i in range(6)]  # duplicates -> ties
+    extra += [(2000, [0.0] * 8), (2001, [-0.0] * 8)]  # more zero-norm rows
+    df = df.unionByName(spark.createDataFrame(extra, ["vec_id", "embedding"]))
+    ix = IvfVectorIndex(spark, str(tmp_path / "ix"), n_cells=4, iterations=2, pq_m=4, pq_k=8)
+    ix.build(df)
+
+    rng = np.random.RandomState(9)
+    queries = [rows[i][1] for i in range(4)] + [
+        [float(x) for x in rng.standard_normal(8)] for _ in range(4)
+    ]
+    for q in queries:
+        for k, n_probe in ((5, 2), (500, 4)):
+            got = [tuple(r) for r in ix.topk(q, k, n_probe=n_probe).collect()]
+            assert got == [tuple(r) for r in _old_topk(ix, q, k, n_probe).collect()]
+        # the ADC re-rank emits the same exact scores for its candidates
+        exact = dict(_outcome(_old_topk(ix, q, 500, 2)))
+        adc = ix.topk(q, 5, n_probe=2, mode="adc").collect()
+        assert adc and all(r["similarity"] == exact[r["vec_id"]] for r in adc)
+
+    # a duplicated query ties at 1.0 with its copies, lower id first
+    top = ix.topk(rows[0][1], 3, n_probe=4).collect()
+    assert [r["vec_id"] for r in top] == [0, 1000, 1004]
+
+    zero = [0.0] * 8
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", flag)
+            assert _outcome(ix.topk(zero, 5, n_probe=2)) == _outcome(_old_topk(ix, zero, 5, 2))
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+    for mode in ("exact", "adc"):
+        top = ix.topk(queries[5], 5, n_probe=2, mode=mode)
+        plan = top._sc._jvm.PythonSQLUtils.explainString(top._jdf.queryExecution(), "formatted")
+        assert re.search(r"PartitionFilters: \[.*_cell#\d+ (IN|INSET)", plan), plan
+
+
 def test_build_cas_folds_in_racing_ingest(spark, tmp_path):
     """r11 (ADVICE r10): an ingest that commits between rebuild()'s
     snapshot read and its VECTORS overwrite is NOT dropped — the lost

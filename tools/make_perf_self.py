@@ -9,7 +9,9 @@ adjustment), and touched whether any of this round's commits changed a
 file on the query's call path (approximated by the commit list the caller
 passes). A control block reports the median raw ratio over the UNtouched
 queries — the same-host factor a judge can use to separate environment
-drift from real change.
+drift from real change. The totals sum only the queries present on both
+sides; names found on one side only are listed in ``only_prev`` /
+``only_now``.
 
 Usage:
     python tools/make_perf_self.py --round 15 \
@@ -52,6 +54,7 @@ def main() -> None:
     prev = _minima(args.prev)
     now = _minima(args.now)
     touched = {q for q in args.touched.split(",") if q}
+    both = set(prev) & set(now)
 
     per_query = {}
     control_ratios = []
@@ -80,8 +83,10 @@ def main() -> None:
         "touched_median_ratio": (
             round(statistics.median(touched_ratios), 3) if touched_ratios else None
         ),
-        "total_prev_min": round(sum(v for v in prev.values()), 3),
-        "total_now_min": round(sum(v for v in now.values()), 3),
+        "total_prev_min": round(sum(prev[q] for q in both), 3),
+        "total_now_min": round(sum(now[q] for q in both), 3),
+        "only_prev": sorted(set(prev) - both),
+        "only_now": sorted(set(now) - both),
         "per_query": per_query,
     }
     path = f"PERF_SELF_r{args.round}.json"
@@ -91,6 +96,9 @@ def main() -> None:
         f"{path}: {len(now)} queries, control median ratio "
         f"{out['control_median_ratio']}, touched median {out['touched_median_ratio']}"
     )
+    for side in ("only_prev", "only_now"):
+        if out[side]:
+            print(f"  {side} (excluded from totals): {', '.join(out[side])}")
 
 
 if __name__ == "__main__":
