@@ -47,8 +47,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # corpus_clean_xxh -> the md5-LSH formula family, now carried
     # in-window by fuzzy_join_docs' shared shingle/permutation helpers;
     # dedup_simhash -> dedup_simhash_sketch; doc_fingerprint ->
-    # dedup_exact/doc_winnow_fingerprint), and knn_ivf* are
-    # pytest-covered (recall bounds).
+    # dedup_exact/doc_winnow_fingerprint).
     return {
         # -- relational parity core (SURVEY §2) --
         "q1_pricing_summary": R.q1_pricing_summary,
@@ -540,11 +539,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         **L.EXTRA_QUERIES,
         "doc_fingerprint": L.QUERIES["doc_fingerprint"],
         "dedup_minhash_lsh": L.QUERIES["dedup_minhash_lsh"],
-        # knn_ivf / knn_ivf_q8 / knn_ivf_pq deregistered in r11 (VERDICT
-        # r10 item 4): the float/q8/pq read paths stay pytest-covered
-        # (recall bounds); the declared ANN serving surface is the
-        # oracle-pinned persisted-index family (knn_index_topk_exact /
-        # knn_index_topk_adc / emb_index_join)
+        # the ANN serving surface is the oracle-pinned persisted-index
+        # family (knn_index_topk_exact / knn_index_topk_adc /
+        # emb_index_join)
         "dedup_simhash": L.QUERIES["dedup_simhash"],
         **M.QUERIES,
         **RX.QUERIES,

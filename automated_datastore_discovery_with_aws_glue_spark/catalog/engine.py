@@ -104,6 +104,8 @@ def _source_listing(attrs: dict[str, str]) -> tuple[str, list[tuple[str, int, in
 
 
 def _fingerprint_of(listing: tuple[str, list[tuple[str, int, int]]] | None) -> str | None:
+    """Content fingerprint of a path-based source: sha256 over its
+    sorted file listing; None for non-path sources."""
     if listing is None:
         return None
     _root, entries = listing
@@ -114,17 +116,6 @@ def _listing_sigs(listing: tuple[str, list[tuple[str, int, int]]]) -> dict[str, 
     """relpath -> 'size:mtime_ns' signature map of a listing."""
     _root, entries = listing
     return {rel: f"{size}:{mtime}" for rel, size, mtime in entries}
-
-
-def _source_fingerprint(attrs: dict[str, str]) -> str | None:
-    """Content fingerprint of a path-based source: sha256 over the
-    sorted file listing (see :func:`_source_listing`). This is the
-    job-bookmark the reference explicitly disabled
-    (`lambda/s3-glue-job-creator/app.py:17`, every run rescans): at
-    100 TB you re-crawl/re-classify only sources whose listing changed.
-    Returns None for non-path sources (callers fall back to
-    unconditional processing)."""
-    return _fingerprint_of(_source_listing(attrs))
 
 
 def _attrs_with_fingerprint() -> F.Column:

@@ -9,9 +9,6 @@ from __future__ import annotations
 
 import re
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column
-
 _SANITIZE_RX = re.compile(r"[^0-9a-zA-Z_]")
 
 
@@ -23,13 +20,3 @@ def sanitize_identifier(name: str) -> str:
         out = "t_" + out
     return out
 
-
-def sanitize_col(col: Column) -> Column:
-    """Executor-side twin of :func:`sanitize_identifier` as a native
-    expression (no UDF) — including the ``t_`` prefix for empty or
-    digit-leading results, so identifiers derived from DATA are valid
-    exactly when the driver-side path would have produced them."""
-    base = F.lower(F.regexp_replace(col, "[^0-9a-zA-Z_]", "_"))
-    return F.when(
-        (base == "") | base.rlike("^[0-9]"), F.concat(F.lit("t_"), base)
-    ).otherwise(base)

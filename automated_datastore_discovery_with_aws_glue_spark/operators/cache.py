@@ -147,11 +147,20 @@ def persistent_rdd_ids(sc) -> set[int]:
         return set()
 
 
+def checkpoint_rdd_id(df: DataFrame) -> int:
+    """Id of the RDD holding a ``localCheckpoint``-ed frame's blocks:
+    the checkpointed plan is a single LogicalRDD leaf over it, and it is
+    exactly the id the checkpoint adds to the persistent-RDD set."""
+    return int(df._jdf.queryExecution().logical().rdd().id())
+
+
 def rdd_id_releaser(sc, ids: set[int]) -> Callable[[], None]:
     """Release callable that unpersists the given RDD ids — the cleanup
-    handle for ``localCheckpoint`` blocks, whose internal RDD is not
-    reachable from the public DataFrame API. Pair with
-    :func:`persistent_rdd_ids` diffs around the checkpoint call."""
+    handle for ``localCheckpoint`` blocks, which ``DataFrame.unpersist``
+    does not touch. Take each id from the checkpointed frame
+    (:func:`checkpoint_rdd_id`); a :func:`persistent_rdd_ids` diff
+    around the checkpoint call also catches whatever another pipeline
+    on the same session persisted meanwhile."""
 
     def _do() -> None:
         try:

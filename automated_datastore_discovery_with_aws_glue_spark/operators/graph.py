@@ -87,12 +87,11 @@ def pagerank(
     cached = [e, nodes, outdeg, e_deg]
     from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
         adopt,
-        persistent_rdd_ids,
+        checkpoint_rdd_id,
         rdd_id_releaser,
     )
 
     sc = edges.sparkSession.sparkContext
-    seen_ids = persistent_rdd_ids(sc)
     # the checkpointed frames must stay PYTHON-referenced until release:
     # dropping the wrapper lets the JVM ContextCleaner unpersist the
     # checkpoint blocks while later rounds still read them
@@ -101,9 +100,11 @@ def pagerank(
     # NOTHING (round t+1 plans on top of t, the final frame on the last
     # round) — release them immediately, so peak checkpoint storage is
     # TWO rounds' node tables however many iterations run, and driver/
-    # executor memory stays flat when iterations double.
+    # executor memory stays flat when iterations double. Each round's
+    # blocks are released by the checkpoint RDD's own id, never by a diff
+    # of the session-wide persistent set, which on a shared session can
+    # hold another pipeline's checkpoint.
     cp_refs: list[DataFrame] = []
-    prev_ids: set[int] = set()
     for _ in range(iterations):
         # each round's ranks feed TWO branches (dangling + inflow).
         # localCheckpoint — not persist — so round t+1's logical plan
@@ -116,19 +117,14 @@ def pagerank(
         # reads (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND); one small job per
         # round is the robust shape. The dangling mass stays a LAZY
         # 1-row frame (crossJoin) — no per-round collect.
-        before_ids = persistent_rdd_ids(sc)
         ranks = ranks.localCheckpoint(eager=True)
         cp_refs.append(ranks)
-        new_ids = persistent_rdd_ids(sc) - before_ids
-        if prev_ids:
+        if len(cp_refs) > 1:
             # the previous round's blocks were fully consumed by the
             # eager materialization above — free them now, keeping only
             # the newest checkpoint alive (its python ref stays in
             # cp_refs until the final releaser runs)
-            rdd_id_releaser(sc, prev_ids)()
-            if len(cp_refs) > 1:
-                cp_refs.pop(0)
-        prev_ids = new_ids
+            rdd_id_releaser(sc, {checkpoint_rdd_id(cp_refs.pop(0))})()
         dang = ranks.filter(F.col("_dang")).agg(
             F.expr(f"coalesce(sum(r), 0) div {n}")
             .cast("bigint")
@@ -152,8 +148,7 @@ def pagerank(
                 ).cast("bigint").alias("r"),
             )
         )
-    own_ids = persistent_rdd_ids(sc) - seen_ids
-    releaser = rdd_id_releaser(sc, own_ids)
+    releaser = rdd_id_releaser(sc, {checkpoint_rdd_id(r) for r in cp_refs})
 
     def _release_cps(refs=cp_refs, rel=releaser) -> None:
         rel()

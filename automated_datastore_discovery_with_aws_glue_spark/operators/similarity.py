@@ -4,8 +4,9 @@
 - blocked near-dup          — cosine >= t within blocking keys
 - hyperplane-LSH top-k      — sign-bit bucketing; the 100 TB path where
                               only the query's bucket is scanned
-- IVF top-k                 — data-adaptive coarse quantizer; scan only
-                              the probed cells
+- IVF top-k                 — `operators/ann.IvfVectorIndex`; this module
+                              holds its integer k-means / PQ quantizer
+                              trainers and cell/ADC expressions
 
 Kernel choice (measured, 200k rows x local[32]): the higher-order
 ``aggregate(zip_with(...))`` dot product is the fast path at every
@@ -344,199 +345,6 @@ def lsh_near_dup(
     return adopt(result, *cached)
 
 
-def ivf_centroids(
-    df: DataFrame,
-    vec_col: str,
-    *,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    refine_sample: int = 32,
-) -> np.ndarray:
-    """Deterministic IVF coarse quantizer: seed with the n_cells vectors
-    of smallest ``xxhash64(id)`` (a seedless pseudo-random but
-    reproducible sample), then run ONE Lloyd/k-means step over a larger
-    hash sample (``n_cells * refine_sample`` vectors) so near-duplicate
-    seeds drift apart instead of wasting cells — two seeds drawn from
-    the same dense region split it, where raw seeds would leave one cell
-    empty and another doubled. Still a tiny driver-side collect
-    (sample x dim floats, bounded regardless of table size) and fully
-    deterministic: the sample order is the hash order (ties broken by
-    id), assignment argmax takes the first maximal cell, and empty or
-    degenerate (zero-mean) cells keep their seed. ``refine_sample=1``
-    disables refinement (seeds only).
-
-    All-zero embeddings are excluded from the sample: normalizing one
-    would yield a NaN centroid, and since Spark sorts NaN above every
-    double, ``ivf_cell_expr``'s argmax would assign EVERY vector to the
-    NaN cell, silently destroying the pruning."""
-    rows = (
-        df.filter(F.exists(F.col(vec_col), lambda x: x.cast("double") != 0.0))
-        .select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h", "v")
-        .limit(n_cells * max(1, refine_sample))
-        .collect()
-    )
-    if not rows:
-        # empty corpus (or all-zero embeddings): no quantizer to build —
-        # callers treat zero centroids as "probe nothing" (empty top-k)
-        return np.zeros((0, max(1, vector_dim(df, vec_col))))
-    pts = np.array([[float(x) for x in r["v"]] for r in rows])
-    seeds = pts[:n_cells]
-    seeds = seeds / np.linalg.norm(seeds, axis=1, keepdims=True)
-    if refine_sample <= 1 or len(pts) <= n_cells:
-        return seeds
-    spts = pts / np.linalg.norm(pts, axis=1, keepdims=True)
-    assign = np.argmax(spts @ seeds.T, axis=1)
-    cents = np.vstack(
-        [
-            spts[assign == c].mean(axis=0) if np.any(assign == c) else seeds[c]
-            for c in range(n_cells)
-        ]
-    )
-    norms = np.linalg.norm(cents, axis=1, keepdims=True)
-    # a cell whose members cancel out (zero mean) falls back to its seed
-    cents = np.where(norms > 1e-12, cents / np.maximum(norms, 1e-300), seeds)
-    return cents
-
-
-def ivf_cell_expr(vec_col: str, centroids: np.ndarray) -> Column:
-    """Cell id = argmax over centroids of dot(v, unit_centroid) — one
-    array_max over (sim, cell) structs (ties break to the higher cell
-    id, deterministically). The centroids ride as a single 2-D literal
-    and the structs come from a transform over the cell index — compact
-    generated code (see :func:`lsh_bucket_expr`), not one unrolled dot
-    per centroid. Map-side, no shuffle."""
-    n = len(centroids)
-    return F.expr(
-        f"CAST(array_max(transform(sequence(0, {n - 1}), i -> named_struct("
-        f"'s', aggregate(zip_with(transform(`{vec_col}`, x -> CAST(x AS DOUBLE)), "
-        f"element_at({_lit_matrix_sql(centroids)}, i + 1), "
-        f"(x, y) -> x * y), CAST(0.0 AS DOUBLE), (a, b) -> a + b), "
-        f"'c', i))).c AS INT)"
-    )
-
-
-def ivf_topk(
-    df: DataFrame,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-    *,
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    n_probe: int = 4,
-    refine_sample: int = 32,
-    centroids: np.ndarray | None = None,
-) -> DataFrame:
-    """Approximate top-k via IVF (inverted-file) cells: score only the
-    vectors whose nearest centroid is among the query's n_probe nearest
-    centroids.
-
-    Scale path: materialize the cell id as a partition/bucket column at
-    ingest (``ivf_cell_expr``) and this becomes a partition-pruned scan
-    of n_probe/n_cells of the data; here the assignment is computed
-    inline. Complements hyperplane LSH: IVF adapts to the data
-    distribution (centroids come from the data), LSH is data-oblivious.
-
-    Pass ``centroids`` to reuse an already-trained quantizer (e.g. the
-    full-Lloyd :func:`kmeans_quantizer`) instead of the sampled one."""
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(
-            df, vec_col, n_cells=n_cells, id_col=id_col, refine_sample=refine_sample
-        )
-    )
-    if len(cents) == 0:
-        return df.select(
-            F.col(id_col), F.lit(0.0).alias("similarity")
-        ).limit(0)
-    qv = np.asarray(query, dtype=float)
-    probes = np.argsort(-(cents @ qv))[:n_probe].tolist()
-    return (
-        df.withColumn("_cell", ivf_cell_expr(vec_col, cents))
-        .filter(F.col("_cell").isin([int(p) for p in probes]))
-        .select(
-            F.col(id_col),
-            F.round(cosine(as_double(F.col(vec_col)), lit_vec([float(x) for x in query])), 4).alias("similarity"),
-        )
-        .orderBy(F.col("similarity").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def write_ivf_partitioned(
-    df: DataFrame,
-    path: str,
-    vec_col: str,
-    *,
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    refine_sample: int = 32,
-    centroids: np.ndarray | None = None,
-) -> np.ndarray:
-    """Materialize the IVF index: assign every vector its cell id
-    (map-side, no shuffle) and write the table PARTITIONED BY the cell —
-    the ingest-side half of the promise in :func:`ivf_topk`'s docstring.
-    Returns the centroids; persist them next to the index (n_cells x dim
-    floats) — queries need the same quantizer.
-
-    At 100 TB this is the difference between scanning everything and
-    listing n_probe directories: the cell filter in
-    :func:`ivf_topk_partitioned` prunes whole partitions at planning
-    time (PartitionFilters, plan-asserted in tests/test_similarity_ivf).
-    Pass ``centroids`` (e.g. from :func:`kmeans_quantizer`) to index with
-    an already-trained quantizer.
-    """
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(
-            df, vec_col, n_cells=n_cells, id_col=id_col, refine_sample=refine_sample
-        )
-    )
-    cell = (
-        F.lit(0) if len(cents) == 0 else ivf_cell_expr(vec_col, cents)
-    )  # empty corpus: nothing to assign, write an empty 1-cell index
-    (
-        df.withColumn("_cell", cell)
-        .write.mode("overwrite")
-        .partitionBy("_cell")
-        .parquet(path)
-    )
-    return cents
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query: list[float],
-    k: int = 10,
-    *,
-    vec_col: str = "emb",
-    id_col: str = "vec_id",
-    n_probe: int = 4,
-) -> DataFrame:
-    """Partition-pruned IVF top-k over a :func:`write_ivf_partitioned`
-    index: the ``_cell IN (probes)`` predicate is a partition filter, so
-    only n_probe/n_cells of the files are even listed, let alone read."""
-    qv = np.asarray(query, dtype=float)
-    probes = [int(p) for p in np.argsort(-(centroids @ qv))[:n_probe]]
-    df = spark.read.parquet(path)
-    return (
-        df.filter(F.col("_cell").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine(as_double(F.col(vec_col)), lit_vec([float(x) for x in query])), 4
-            ).alias("similarity"),
-        )
-        .orderBy(F.col("similarity").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 def lsh_topk(
     df: DataFrame,
     vec_col: str,
@@ -577,313 +385,15 @@ def lsh_topk(
     )
 
 
-def quantize_int8_cols(vec_col: str) -> tuple[Column, Column]:
-    """Symmetric per-vector int8 quantization as (q, scale) columns —
-    the identical math the oracle-checked ``emb_quantize_int8`` query
-    pins (scale = amax/127; q = floor(x/scale + 0.5) clamped): the
-    storage form of :func:`write_ivf_partitioned_q8`. ``array<tinyint>``
-    on disk — genuinely 4x smaller than float32."""
-    xs = F.transform(vec_col, lambda x: x.cast("double"))
-    amax = F.array_max(F.transform(xs, F.abs))
-    scale = F.when(amax == 0.0, F.lit(1.0)).otherwise(amax / F.lit(127.0))
-    q = F.transform(
-        xs,
-        lambda x: F.greatest(
-            F.lit(-127),
-            F.least(F.lit(127), F.floor(x / scale + F.lit(0.5)).cast("int")),
-        ).cast("tinyint"),
-    )
-    return q, scale
-
-
-def write_ivf_partitioned_q8(
-    df: DataFrame,
-    path: str,
-    vec_col: str,
-    *,
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    refine_sample: int = 32,
-    centroids: np.ndarray | None = None,
-) -> np.ndarray:
-    """Materialize the MEMORY-REDUCED IVF index: cell-partitioned like
-    :func:`write_ivf_partitioned`, but storing each vector int8-
-    quantized (``q`` + ``scale``) instead of at full precision — the
-    index a 100 TB embedding corpus can actually hold (4x smaller, and
-    cosine over the quantized ints is scale-free, so scoring needs no
-    dequantization). Full-precision vectors stay in primary storage;
-    :func:`ivf_topk_q8` re-ranks the few k*c candidates against them by
-    key. Returns the centroids (persist them next to the index).
-    ``centroids`` plugs in a pre-trained quantizer (kmeans_quantizer)."""
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(
-            df, vec_col, n_cells=n_cells, id_col=id_col, refine_sample=refine_sample
-        )
-    )
-    cell = F.lit(0) if len(cents) == 0 else ivf_cell_expr(vec_col, cents)
-    q, scale = quantize_int8_cols(vec_col)
-    (
-        df.select(
-            F.col(id_col),
-            q.alias("q"),
-            scale.alias("scale"),
-            cell.alias("_cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("_cell")
-        .parquet(path)
-    )
-    return cents
-
-
-def ivf_topk_q8(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    query: list[float],
-    full_df: DataFrame,
-    k: int = 10,
-    *,
-    vec_col: str = "emb",
-    id_col: str = "vec_id",
-    n_probe: int = 4,
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """Two-tier IVF read: (1) partition-pruned scan of the n_probe
-    probed cells scoring the INT8 vectors (cosine is scale-invariant,
-    so the quantized ints score directly — no dequantize, quarter the
-    bytes through the scan); (2) the top ``k * rerank_factor``
-    candidates re-rank at FULL precision via a broadcast semi-join
-    against primary storage (``full_df``) — k*c rows, metadata scale.
-    Quantization error can only demote a candidate out of the k*c pool,
-    never corrupt a returned similarity: every emitted score is exact."""
-    qv = np.asarray(query, dtype=float)
-    probes = [int(p) for p in np.argsort(-(centroids @ qv))[:n_probe]]
-    idx = spark.read.parquet(path)
-    cands = (
-        idx.filter(F.col("_cell").isin(probes))
-        # an all-zero vector quantizes to zeros and has no defined
-        # cosine (a divide-by-zero under ANSI) — exclude it before
-        # scoring so it neither errors nor consumes a candidate slot
-        .filter(dot(as_double(F.col("q")), as_double(F.col("q"))) != 0.0)
-        .select(
-            id_col,
-            cosine(as_double(F.col("q")), lit_vec([float(x) for x in query])).alias(
-                "_approx"
-            ),
-        )
-        .orderBy(F.col("_approx").desc(), F.col(id_col))
-        .limit(k * rerank_factor)
-    )
-    return (
-        full_df.join(F.broadcast(cands.select(id_col)), id_col)
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine(as_double(F.col(vec_col)), lit_vec([float(x) for x in query])), 4
-            ).alias("similarity"),
-        )
-        .orderBy(F.col("similarity").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_codebooks(
-    df: DataFrame,
-    vec_col: str,
-    *,
-    m: int = 8,
-    k: int = 16,
-    id_col: str = "vec_id",
-    sample: int = 512,
-) -> np.ndarray:
-    """Deterministic product-quantization codebooks: split the
-    (normalized) vector into ``m`` equal subspaces and learn ``k``
-    centroids per subspace — seeds are the hash-ordered sample's first
-    ``k`` subvectors (the :func:`ivf_centroids` sampling pattern), then
-    ONE Lloyd step over the full sample drifts them to subspace means.
-    Driver-side numpy over a BOUNDED sample (``sample`` x dim floats,
-    independent of table size), fully deterministic. Returns shape
-    ``(m, k, dim/m)``. All-zero vectors are excluded (no direction to
-    quantize; the read path excludes them too)."""
-    rows = (
-        df.filter(F.exists(F.col(vec_col), lambda x: x.cast("double") != 0.0))
-        .select(F.col(vec_col).alias("v"), F.xxhash64(F.col(id_col)).alias("h"))
-        .orderBy("h", "v")
-        .limit(sample)
-        .collect()
-    )
-    if not rows:
-        d = max(1, vector_dim(df, vec_col))
-        if d % m:
-            raise ValueError(f"dim {d} not divisible by m={m}")
-        return np.zeros((m, 0, d // m))
-    pts = np.array([[float(x) for x in r["v"]] for r in rows])
-    pts = pts / np.linalg.norm(pts, axis=1, keepdims=True)
-    d = pts.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    ds = d // m
-    books = []
-    for j in range(m):
-        sub = pts[:, j * ds : (j + 1) * ds]
-        seeds = sub[: min(k, len(sub))]
-        if len(seeds) < k:  # degenerate tiny sample: pad by repeating
-            seeds = np.vstack([seeds] * ((k + len(seeds) - 1) // len(seeds)))[:k]
-        d2 = ((sub[:, None, :] - seeds[None, :, :]) ** 2).sum(axis=2)
-        assign = np.argmin(d2, axis=1)
-        cents = np.vstack(
-            [
-                sub[assign == c].mean(axis=0) if np.any(assign == c) else seeds[c]
-                for c in range(k)
-            ]
-        )
-        books.append(cents)
-    return np.stack(books)
-
-
-def write_ivf_partitioned_pq(
-    df: DataFrame,
-    path: str,
-    vec_col: str,
-    *,
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    m: int = 8,
-    k: int = 16,
-    refine_sample: int = 32,
-    centroids: np.ndarray | None = None,
-    codebooks: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Materialize the IVF-PQ index: cell-partitioned like the q8
-    variant, but each vector stored as ``m`` 1-byte PQ codes (32x
-    smaller than float32 at m=8 over 64 dims) — the read path scores
-    codes against a per-query lookup table and re-ranks the survivors
-    at full precision from primary storage. All-zero vectors are
-    excluded from the index (no cosine direction; consistent with the
-    q8 read path). Returns (ivf_centroids, pq_codebooks); pass
-    ``centroids``/``codebooks`` to index with pre-trained quantizers
-    (:func:`kmeans_quantizer` / :func:`pq_quantizer_trained`)."""
-    nz = df.filter(F.exists(F.col(vec_col), lambda x: x.cast("double") != 0.0))
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(
-            nz, vec_col, n_cells=n_cells, id_col=id_col, refine_sample=refine_sample
-        )
-    )
-    books = (
-        codebooks
-        if codebooks is not None
-        else pq_codebooks(nz, vec_col, m=m, k=k, id_col=id_col)
-    )
-    cell = F.lit(0) if len(cents) == 0 else ivf_cell_expr(vec_col, cents)
-    norm = (
-        f"sqrt(aggregate(transform(`{vec_col}`, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (a, b) -> a + b))"
-    )
-    (
-        nz.withColumn("_n", F.expr(f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE) / {norm})"))
-        .select(
-            F.col(id_col),
-            _pq_codes_column(books).alias("codes"),
-            cell.alias("_cell"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("_cell")
-        .parquet(path)
-    )
-    return cents, books
-
-
-def _pq_codes_column(codebooks: np.ndarray) -> Column:
-    """``codes`` expression over a pre-normalized ``_n`` vector column:
-    per subspace, argmin squared-L2 against that subspace's centroid
-    matrix (ties break to the lower code via the struct order), emitted
-    as ``array<tinyint>`` of length ``m`` — 1 byte per subspace."""
-    m, k, ds = codebooks.shape
-    subs = []
-    for j in range(m):
-        cb = _lit_matrix_sql(codebooks[j])
-        subs.append(
-            f"CAST(array_min(transform(sequence(0, {k - 1}), c -> named_struct("
-            f"'d', aggregate(zip_with("
-            f"slice(_n, {j * ds + 1}, {ds}), element_at({cb}, c + 1), "
-            f"(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), (a, b) -> a + b), "
-            f"'c', c))).c AS TINYINT)"
-        )
-    return F.expr("array(" + ", ".join(subs) + ")")
-
-
-def ivf_topk_pq(
-    spark,
-    path: str,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
-    query: list[float],
-    full_df: DataFrame,
-    topk: int = 10,
-    *,
-    vec_col: str = "emb",
-    id_col: str = "vec_id",
-    n_probe: int = 4,
-    rerank_factor: int = 4,
-) -> DataFrame:
-    """Two-tier IVF-PQ read: (1) partition-pruned scan of the probed
-    cells scoring PQ codes by ASYMMETRIC DISTANCE — the per-query
-    (m x k) lookup table of subspace distances folds in as a literal,
-    so scoring a vector is ``m`` byte-indexed lookups, no arithmetic on
-    the vector at all; (2) the top ``topk * rerank_factor`` candidates
-    re-rank at full precision against primary storage. Same exactness
-    contract as the q8 path: quantization can demote a candidate out of
-    the pool, never corrupt an emitted similarity."""
-    m, k, ds = codebooks.shape
-    qv = np.asarray(query, dtype=float)
-    probes = [int(p) for p in np.argsort(-(centroids @ qv))[:n_probe]]
-    qn = qv / np.linalg.norm(qv)
-    # ADC lookup table: distance from the query's j-th subvector to
-    # every centroid of subspace j
-    lut = np.stack(
-        [((codebooks[j] - qn[j * ds : (j + 1) * ds]) ** 2).sum(axis=1) for j in range(m)]
-    )
-    lut_sql = _lit_matrix_sql(lut)
-    adc = F.expr(
-        f"aggregate(sequence(0, {m - 1}), CAST(0.0 AS DOUBLE), (acc, j) -> "
-        f"acc + element_at(element_at({lut_sql}, j + 1), CAST(element_at(codes, j + 1) AS INT) + 1))"
-    )
-    idx = spark.read.parquet(path)
-    cands = (
-        idx.filter(F.col("_cell").isin(probes))
-        .select(id_col, adc.alias("_adc"))
-        .orderBy(F.col("_adc").asc(), F.col(id_col))
-        .limit(topk * rerank_factor)
-    )
-    return (
-        full_df.join(F.broadcast(cands.select(id_col)), id_col)
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine(as_double(F.col(vec_col)), lit_vec([float(x) for x in query])), 4
-            ).alias("similarity"),
-        )
-        .orderBy(F.col("similarity").desc(), F.col(id_col))
-        .limit(topk)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Distributed k-means (integer-quantized Lloyd) — the IVF/PQ quantizer's
 # scale path
 # ---------------------------------------------------------------------------
 #
-# The sampled one-step quantizer above (`ivf_centroids`) is memory-safe at
-# any corpus size but trains on a BOUNDED sample; at real corpus sizes the
-# cells it builds can be unbalanced. This is full Lloyd over ALL vectors,
-# in Spark's execution model:
+# Full Lloyd over ALL vectors (not a bounded sample, whose cells can come
+# out unbalanced at real corpus sizes), in Spark's execution model:
 #
-# - assign: the same literal-matrix argmax as `ivf_cell_expr`, map-side,
+# - assign: a literal-matrix integer argmax (`kmeans_cell_expr`), map-side,
 #   zero shuffle;
 # - update: posexplode + groupBy(cell, pos) sum/count — partial aggregation
 #   combines map-side, so the shuffle carries k x d partial rows per
@@ -1202,35 +712,6 @@ def kmeans_centroids_int(
     return cents
 
 
-def kmeans_quantizer(
-    df: DataFrame,
-    vec_col: str,
-    *,
-    n_cells: int = 16,
-    iterations: int = 3,
-    id_col: str = "vec_id",
-    hash_fn: str = "xxh",
-) -> np.ndarray:
-    """The trained centroids as a unit-normalized float matrix — a
-    drop-in replacement for :func:`ivf_centroids` wherever a coarse
-    quantizer is consumed (`ivf_cell_expr`, the partitioned index
-    writers). Falls back to the sampled quantizer's shape contract:
-    zero rows -> (0, dim)."""
-    cents = kmeans_centroids_int(
-        df,
-        vec_col,
-        n_cells=n_cells,
-        iterations=iterations,
-        id_col=id_col,
-        hash_fn=hash_fn,
-    )
-    if not cents:
-        return np.zeros((0, max(1, vector_dim(df, vec_col))))
-    arr = np.array(cents, dtype=float) / 1_000_000.0
-    norms = np.linalg.norm(arr, axis=1, keepdims=True)
-    return arr / np.maximum(norms, 1e-300)
-
-
 # ---------------------------------------------------------------------------
 # Distributed PQ codebook training — the product-quantizer's scale path
 # ---------------------------------------------------------------------------
@@ -1407,27 +888,3 @@ def pq_codebooks_int(
     finally:
         if own_base:
             base.unpersist()
-
-
-def pq_quantizer_trained(
-    df: DataFrame,
-    vec_col: str,
-    *,
-    m: int = 8,
-    k: int = 16,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    hash_fn: str = "xxh",
-) -> np.ndarray:
-    """The trained codebooks as the float (m, k, d/m) tensor
-    :func:`write_ivf_partitioned_pq` / :func:`ivf_topk_pq` consume —
-    a drop-in replacement for the sampled :func:`pq_codebooks`."""
-    books = pq_codebooks_int(
-        df, vec_col, m=m, k=k, iterations=iterations, id_col=id_col, hash_fn=hash_fn
-    )
-    if not books:
-        d = max(1, vector_dim(df, vec_col))
-        if d % m:
-            raise ValueError(f"dim {d} not divisible by m={m}")
-        return np.zeros((m, 0, d // m))
-    return np.array(books, dtype=float) / 1_000_000.0

@@ -991,15 +991,6 @@ KNN_BRUTEFORCE_SQL = """
 """
 
 
-def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via IVF cells, probing 4 of 16 (no SQL oracle —
-    data-dependent centroids + probabilistic recall; self-retrieval and
-    brute-force containment asserted in pytest)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    return S.ivf_topk(emb, "embedding", query, 10, id_col="vec_id", n_cells=16, n_probe=4)
-
-
 def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 via hyperplane LSH. The seeded planes fold in
     as literals, so the DuckDB oracle (``knn_lsh_oracle_sql``) replays
@@ -1288,10 +1279,6 @@ QUERIES = {
     "doc_winnow_fingerprint": doc_winnow_fingerprint,
     "knn_bruteforce": knn_bruteforce,
     "knn_lsh": knn_lsh,
-    # knn_ivf deregistered in r11 (VERDICT r10 item 4): the float
-    # xxhash IVF path stays pytest-covered (test_ivf_topk_*); the
-    # DECLARED serving surface is the oracle-pinned persisted-index
-    # family (knn_index_topk_exact / knn_index_topk_adc / emb_index_join)
     "emb_near_dup": emb_near_dup,
     "emb_near_dup_lsh": emb_near_dup_lsh,
 }
@@ -2476,40 +2463,6 @@ ORACLES["tok_bpe_encode"] = TOK_BPE_ENCODE_SQL
 ORACLES["tok_pack_sequences_bpe"] = TOK_PACK_BPE_SQL
 
 
-def knn_ivf_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via the MEMORY-REDUCED persisted IVF index
-    (r8): vectors stored int8-quantized + cell-partitioned
-    (``write_ivf_partitioned_q8``), the probe scans n_probe/n_cells of
-    the partitions scoring quantized ints (cosine is scale-free), and
-    the top k*4 candidates re-rank at full precision against primary
-    storage — every emitted similarity is the exact cosine. Rows-only:
-    data-dependent centroids + probabilistic recall (like ``knn_ivf``);
-    the quantization math is pinned by the oracle-checked
-    ``emb_quantize_int8`` and the recall/exactness bounds by
-    tests/test_text_similarity.py."""
-    from automated_datastore_discovery_with_aws_glue_spark.sources.readers import scratch_dir
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    # one scratch dir per (sf_dir, process), overwritten on every run —
-    # a fresh mkdtemp per invocation leaked an int8 copy of the
-    # embeddings into /tmp on every bench/oracle sweep; the PID suffix
-    # keeps concurrent sessions from clobbering each other mid-read
-    path = scratch_dir("ivf_q8_" + sf_dir)
-    cents = S.write_ivf_partitioned_q8(
-        emb, path, "embedding", id_col="vec_id", n_cells=16
-    )
-    return S.ivf_topk_q8(
-        spark, path, cents, query, emb, 10,
-        vec_col="embedding", id_col="vec_id", n_probe=4,
-    )
-
-
-# deregistered in r11 (VERDICT r10 item 4): the q8 read path stays
-# pytest-covered (test_ivf_topk_q8_*); the declared quantized-serving
-# surface is the oracle-pinned knn_index_topk_adc / knn_index_topk_exact
-
-
 def corpus_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered decontamination (r8): the 100 TB regime where
     the benchmark gram set is too large to broadcast exactly — a
@@ -2574,35 +2527,6 @@ J_SALTED_SKEW_SQL = """
 
 EXTRA_QUERIES["j_salted_skew_enrich"] = j_salted_skew_enrich
 ORACLES["j_salted_skew_enrich"] = J_SALTED_SKEW_SQL
-
-
-def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-10 via the IVF-PQ index (r8): vectors stored as
-    m=8 one-byte product-quantization codes (32x smaller than float32 —
-    the high-dim memory-reduction tier the r7 verdict named), probed
-    cells scored by asymmetric distance (a per-query (m x k) literal
-    lookup table — scoring touches only the code bytes), survivors
-    re-ranked at full precision. Rows-only like its q8/ivf siblings
-    (data-dependent codebooks + probabilistic recall); the encoding is
-    pinned against a full numpy replay and the recall/exactness bounds
-    in tests/test_text_similarity.py."""
-    from automated_datastore_discovery_with_aws_glue_spark.sources.readers import scratch_dir
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    path = scratch_dir("ivf_pq_" + sf_dir)
-    cents, books = S.write_ivf_partitioned_pq(
-        emb, path, "embedding", id_col="vec_id", n_cells=16, m=8, k=16
-    )
-    return S.ivf_topk_pq(
-        spark, path, cents, books, query, emb, 10,
-        vec_col="embedding", id_col="vec_id", n_probe=4,
-    )
-
-
-# deregistered in r11 (VERDICT r10 item 4): the PQ read path stays
-# pytest-covered (test_pq_tier_codes_and_adc_topk and the ivf_topk_pq
-# recall tests); the declared ADC surface is knn_index_topk_adc
 
 
 def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2806,8 +2730,9 @@ def knn_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer means, mul-div-floor renormalization — FMA-safe), so the
     oracle replays all three iterations bit-for-bit, DuckDB's `//`
     matching Spark's `div`/Java truncation. md5-seeded twin of the
-    xxhash64 production path (`kmeans_quantizer`); output = the final
-    centroid matrix unnested to atomic (cell, pos, c) rows."""
+    xxhash64 production path (`operators/ann.py IvfVectorIndex`);
+    output = the final centroid matrix unnested to atomic (cell, pos, c)
+    rows."""
     from automated_datastore_discovery_with_aws_glue_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2934,7 +2859,7 @@ def knn_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer trunc-divs (no renormalization — codebooks approximate
     subvectors, not directions), so the oracle replays both iterations
     with zero float steps. md5 twin of the xxhash64 production path
-    (`pq_quantizer_trained`)."""
+    (`operators/ann.py IvfVectorIndex`)."""
     from automated_datastore_discovery_with_aws_glue_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -3206,8 +3131,8 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2 to the final top-10 — all as ONE batch plan (r11).
     Every number is an exact integer, so DuckDB replays training,
     probe selection, code assignment, ADC, and re-rank bit-for-bit.
-    md5 twin of the xxhash64 production path (`ivf_topk_pq` /
-    `operators/ann.py`)."""
+    md5 twin of the xxhash64 production path (`operators/ann.py
+    IvfVectorIndex`)."""
     from pyspark.sql import Window
 
     m, kk, n_cells, n_probe = 8, 8, 4, 2

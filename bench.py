@@ -91,15 +91,14 @@ HEADLINE = [
     "j_asof_rate",
     "j_range_burst",
     # r8: temporal-join directions + pair emission, the corpus-trained
-    # BPE tokenizer (training + encode + token-exact packing), real
-    # multi-frame GIF sampling, and the int8-quantized IVF read path
+    # BPE tokenizer (training + encode + token-exact packing) and real
+    # multi-frame GIF sampling
     "j_asof_nearest",
     "j_range_pairs",
     "tok_bpe_encode",
     "tok_pack_sequences_bpe",
     "mm_gif_frame_sample",
-    # r11: the persisted-index serving family replaces the rows-only
-    # knn_ivf_q8/knn_ivf_pq bench rows (VERDICT r10 items 1/4/6)
+    # r11: the persisted-index serving family (VERDICT r10 items 1/4/6)
     "knn_index_topk_exact",
     "knn_index_topk_adc",
     "emb_index_join",

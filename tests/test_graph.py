@@ -111,3 +111,36 @@ def test_pagerank_checkpoint_storage_is_bounded_by_two_rounds(spark):
 
     k5, k10 = retained(5), retained(10)
     assert k5 == k10, f"checkpoint footprint grew with iterations: {k5} vs {k10}"
+
+
+def test_pagerank_release_spares_foreign_checkpoints(spark, monkeypatch):
+    """On a shared session another pipeline can localCheckpoint while
+    PageRank's own checkpoint call runs. PageRank must release only its
+    own checkpoint blocks: an unpersisted local checkpoint cannot be
+    recomputed, so freeing a foreign one breaks the other pipeline
+    (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import release
+
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is
+    # its abstract base in Spark 4)
+    frame_cls = type(spark.range(1))
+    original = frame_cls.localCheckpoint
+    foreign = []
+
+    def checkpoint_beside_a_foreign_one(self, *args, **kwargs):
+        out = original(self, *args, **kwargs)
+        foreign.append(original(spark.range(len(foreign) + 3), eager=True))
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint_beside_a_foreign_one)
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")], ["src", "dst"]
+    )
+    out = pagerank(edges, iterations=4)
+    assert out.count() == 3
+    release(out)
+    monkeypatch.undo()
+
+    assert len(foreign) == 4
+    for i, f in enumerate(foreign):
+        assert [r["id"] for r in f.collect()] == list(range(i + 3))

@@ -48,3 +48,46 @@ def test_no_cartesian_or_python_udf(spark, name):
         f"{name} emits non-atomic output column(s) {offenders}; the "
         f"driver harness cannot canonicalize them — serialize or unnest"
     )
+
+
+
+def test_every_plan_function_is_registered_or_called():
+    """Dead plan code cannot come back silently: every plan function
+    (first two parameters ``(spark, sf_dir)`` in ``plans/*.py``) is a
+    ``queries()`` entry or is called by name from another function in
+    the package (shared frames such as ``derived_pii_frame``). An AST
+    walk; nothing is planned or run."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(entrymod.__file__).resolve().parent / (
+        "automated_datastore_discovery_with_aws_glue_spark"
+    )
+    registered = {
+        (f.__module__.rsplit(".", 1)[-1], f.__name__)
+        for f in entrymod.queries().values()
+    }
+    plans: set[tuple[str, str]] = set()
+    callees: set[str] = set()
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            params = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+            if path.parent.name == "plans" and params[:2] == ["spark", "sf_dir"]:
+                plans.add((path.stem, fn.name))
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                    if name and name != fn.name:
+                        callees.add(name)
+    offenders = sorted(
+        f"plans/{mod}.py:{name}"
+        for mod, name in plans
+        if (mod, name) not in registered and name not in callees
+    )
+    assert plans and not offenders, (
+        f"plan functions neither registered in queries() nor called: {offenders}"
+    )

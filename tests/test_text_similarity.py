@@ -155,130 +155,6 @@ def test_lsh_near_dup_hot_bucket_cap(spark):
     assert got_capped == {(200, 201)}  # hot bucket excluded, small bucket intact
 
 
-def test_ivf_centroids_zero_norm_guard(spark):
-    """An all-zero embedding in the hash-ordered sample must not become a
-    NaN centroid (NaN sorts above every double, so one NaN cell would
-    swallow every vector and silently destroy IVF pruning)."""
-    import numpy as np
-
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_cell_expr,
-        ivf_centroids,
-    )
-
-    axes = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]
-    rows = [(i, [0.0, 0.0, 0.0, 0.0] if i % 2 == 0 else axes[i % 3]) for i in range(24)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    cents = ivf_centroids(df, "embedding", n_cells=4)
-    assert not np.isnan(cents).any()
-    got = {
-        r["vec_id"]: r["c"]
-        for r in df.withColumn("c", ivf_cell_expr("embedding", cents)).collect()
-    }
-    # distinct-axis vectors must not all collapse into one cell
-    assert len({got[i] for i in got if i % 2 == 1}) > 1
-
-
-def test_ivf_topk_self_and_containment(spark):
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import ivf_topk
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    rows = ivf_topk(emb, "embedding", query, 5, id_col="vec_id", n_cells=8, n_probe=3).collect()
-    assert rows[0]["vec_id"] == 7  # own cell is always probe #1
-    assert abs(rows[0]["similarity"] - 1.0) < 1e-9
-    exact = {r["vec_id"] for r in brute_force_topk(emb, "embedding", query, 50).collect()}
-    assert {r["vec_id"] for r in rows} <= exact  # scores are true cosines
-
-
-def test_ivf_partitioned_prunes_and_matches_inline(spark, tmp_path):
-    """The persisted-index path: the _cell predicate must prune at the
-    partition level (PartitionFilters in the scan node), and the pruned
-    query must return exactly what the inline assignment returns."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_partitioned,
-        write_ivf_partitioned,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    path = str(tmp_path / "ivf_index")
-    cents = write_ivf_partitioned(emb, path, "embedding", id_col="vec_id", n_cells=8)
-
-    top = ivf_topk_partitioned(
-        spark, path, cents, query, 5, vec_col="embedding", id_col="vec_id", n_probe=3
-    )
-    plan = top._sc._jvm.PythonSQLUtils.explainString(
-        top._jdf.queryExecution(), "formatted"
-    )
-    # the cell predicate reaches the scan as a partition filter over
-    # exactly the n_probe probed cells — a planning-time prune, not a
-    # post-scan filter
-    import re
-
-    m = re.search(r"PartitionFilters: \[_cell#\d+ IN \(([\d,]+)\)\]", plan)
-    assert m and len(m.group(1).split(",")) == 3, plan
-    assert "PushedFilters" not in plan or "_cell" not in plan.split("PushedFilters", 1)[1].split("\n")[0]
-
-    inline = ivf_topk(
-        emb, "embedding", query, 5, id_col="vec_id", n_cells=8, n_probe=3
-    ).collect()
-    assert [tuple(r) for r in top.collect()] == [tuple(r) for r in inline]
-
-
-def test_ivf_lloyd_refinement_recall_and_determinism(spark):
-    """The one Lloyd step over the hash sample exists for CLUSTERED data
-    (the realistic embedding shape): hash-random seeds over-sample dense
-    regions, wasting cells, and the refinement drifts centroids toward
-    region means. On a skewed clustered fixture the refined quantizer's
-    recall at the same n_probe must be >= the raw seeds'; centroids stay
-    deterministic call-to-call."""
-    import numpy as np
-
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_centroids,
-        ivf_topk,
-    )
-
-    rng = np.random.RandomState(7)
-    dim, n_clusters = 16, 8
-    centers = rng.standard_normal((n_clusters, dim)) * 3
-    rows = []
-    i = 0
-    for c in range(n_clusters):
-        for _ in range(150 if c == 0 else 12):  # one dominant dense cluster
-            v = centers[c] + rng.standard_normal(dim) * 0.15
-            rows.append((i, [float(x) for x in v]))
-            i += 1
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    c1 = ivf_centroids(df, "embedding", n_cells=8)
-    c2 = ivf_centroids(df, "embedding", n_cells=8)
-    assert np.array_equal(c1, c2)  # deterministic
-    assert not np.isnan(c1).any()
-
-    k = 8
-    queries = [150 + 12 * c for c in range(7)] + [0, 75]
-
-    def recall(refine):
-        hits = 0
-        for qid in queries:
-            q = rows[qid][1]
-            exact = {r["vec_id"] for r in brute_force_topk(df, "embedding", q, k).collect()}
-            approx = {
-                r["vec_id"]
-                for r in ivf_topk(
-                    df, "embedding", q, k, id_col="vec_id",
-                    n_cells=8, n_probe=2, refine_sample=refine,
-                ).collect()
-            }
-            hits += len(exact & approx)
-        return hits / (k * len(queries))
-
-    assert recall(32) >= recall(1)
-
-
 def test_repetition_stats_hand_computed(spark):
     """Gopher-style repetition signals: duplicate-bigram fraction and
     top-bigram share against hand-computed values."""
@@ -299,23 +175,6 @@ def test_repetition_stats_hand_computed(spark):
     assert out[1] == (3, round(2 / 3, 4), 1.0)
     assert out[2] == (4, 0.0, 0.25)
     assert out[3] == (0, 0.0, 0.0)
-
-
-def test_ivf_empty_and_allzero_corpus(spark):
-    """A filtered-to-empty (or all-zero-embedding) pipeline stage must
-    yield an empty top-k, not a numpy axis crash in the quantizer."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_centroids,
-        ivf_topk,
-    )
-
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
-    assert ivf_topk(empty, "embedding", [1.0, 0.0, 0.0, 0.0], 5).collect() == []
-    zeros = spark.createDataFrame(
-        [(i, [0.0, 0.0, 0.0, 0.0]) for i in range(3)], ["vec_id", "embedding"]
-    )
-    assert len(ivf_centroids(zeros, "embedding")) == 0
-    assert ivf_topk(zeros, "embedding", [1.0, 0.0, 0.0, 0.0], 5).collect() == []
 
 
 def test_weighted_sample_key_statistics_and_determinism(spark):
@@ -399,185 +258,6 @@ def test_bigram_lm_catches_word_salad_unigram_misses(spark, tmp_path, monkeypatc
     assert bi_salad > bi_p90 > 0 and bi_salad > 2 * bi_med, (bi_salad, bi_p90, bi_med)
 
 
-def test_ivf_q8_index_prunes_stores_int8_and_reranks_exact(spark, tmp_path):
-    """The memory-reduced IVF path: the persisted index stores
-    array<tinyint> (4x smaller), the probe prunes at the partition
-    level, the k*c candidate pool re-ranks at FULL precision so every
-    emitted similarity is the exact cosine, and recall vs the
-    full-precision partitioned index stays high."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk_partitioned,
-        ivf_topk_q8,
-        write_ivf_partitioned,
-        write_ivf_partitioned_q8,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    qpath = str(tmp_path / "ivf_q8")
-    cents = write_ivf_partitioned_q8(emb, qpath, "embedding", id_col="vec_id", n_cells=8)
-
-    idx = spark.read.parquet(qpath)
-    assert dict(idx.dtypes)["q"] == "array<tinyint>"  # genuinely int8 on disk
-
-    top = ivf_topk_q8(
-        spark, qpath, cents, query, emb, 5,
-        vec_col="embedding", id_col="vec_id", n_probe=3,
-    )
-    plan = top._sc._jvm.PythonSQLUtils.explainString(
-        top._jdf.queryExecution(), "formatted"
-    )
-    import re
-
-    m = re.search(r"PartitionFilters: \[_cell#\d+ IN \(([\d,]+)\)\]", plan)
-    assert m and len(m.group(1).split(",")) == 3, plan
-
-    got = top.collect()
-    assert got[0]["vec_id"] == 7 and abs(got[0]["similarity"] - 1.0) < 1e-9
-
-    # every emitted similarity is the EXACT cosine (quantization can
-    # demote a candidate, never corrupt a score)
-    exact = {
-        r["vec_id"]: r["similarity"]
-        for r in brute_force_topk(emb, "embedding", query, 200).collect()
-    }
-    for r in got:
-        assert exact[r["vec_id"]] == r["similarity"], r
-
-    # recall vs the full-precision partitioned index on the same probes
-    fpath = str(tmp_path / "ivf_fp")
-    cents_fp = write_ivf_partitioned(emb, fpath, "embedding", id_col="vec_id", n_cells=8)
-    full = ivf_topk_partitioned(
-        spark, fpath, cents_fp, query, 5, vec_col="embedding", id_col="vec_id", n_probe=3
-    ).collect()
-    overlap = {r["vec_id"] for r in got} & {r["vec_id"] for r in full}
-    assert len(overlap) >= 4, (got, full)
-
-
-def test_ivf_q8_zero_vector_never_tops_candidates(spark, tmp_path):
-    """An all-zero embedding quantizes to zeros and cosines to NaN; the
-    nanvl guard must pin it to the candidate-pool floor, not the top."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_topk_q8,
-        write_ivf_partitioned_q8,
-    )
-
-    axes = [
-        [1.0, 0.0, 0.0, 0.0], [0.9, 0.1, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
-        [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0],
-    ]
-    rows = [(i, v) for i, v in enumerate(axes)] + [(99, [0.0, 0.0, 0.0, 0.0])]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    path = str(tmp_path / "zq8")
-    cents = write_ivf_partitioned_q8(df, path, "embedding", id_col="vec_id", n_cells=2)
-    got = ivf_topk_q8(
-        spark, path, cents, [1.0, 0.0, 0.0, 0.0], df, 3,
-        vec_col="embedding", id_col="vec_id", n_probe=2, rerank_factor=2,
-    ).collect()
-    assert [r["vec_id"] for r in got][:2] == [0, 1]
-    assert 99 not in {r["vec_id"] for r in got}
-
-
-def test_ivf_pq_index_stores_codes_prunes_and_reranks_exact(spark, tmp_path):
-    """The IVF-PQ tier: the persisted index stores m 1-byte codes per
-    vector (no vector column at all — the real memory-reduction tier),
-    the probe prunes partitions, ADC scoring + full-precision re-rank
-    returns exact similarities, and recall vs the full-precision
-    partitioned index stays high."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk_partitioned,
-        ivf_topk_pq,
-        write_ivf_partitioned,
-        write_ivf_partitioned_pq,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 7).collect()[0]["embedding"]]
-    path = str(tmp_path / "ivf_pq")
-    cents, books = write_ivf_partitioned_pq(
-        emb, path, "embedding", id_col="vec_id", n_cells=8, m=8, k=16
-    )
-    assert books.shape == (8, 16, 8)  # 64 dims -> 8 subspaces of 8
-
-    idx = spark.read.parquet(path)
-    assert dict(idx.dtypes)["codes"] == "array<tinyint>"
-    assert "embedding" not in idx.columns  # codes only: 8 bytes/vector
-    assert idx.selectExpr("max(size(codes))").collect()[0][0] == 8
-
-    top = ivf_topk_pq(
-        spark, path, cents, books, query, emb, 5,
-        vec_col="embedding", id_col="vec_id", n_probe=3,
-    )
-    plan = top._sc._jvm.PythonSQLUtils.explainString(
-        top._jdf.queryExecution(), "formatted"
-    )
-    import re
-
-    m_ = re.search(r"PartitionFilters: \[_cell#\d+ IN \(([\d,]+)\)\]", plan)
-    assert m_ and len(m_.group(1).split(",")) == 3, plan
-
-    got = top.collect()
-    assert got[0]["vec_id"] == 7 and abs(got[0]["similarity"] - 1.0) < 1e-9
-    exact = {
-        r["vec_id"]: r["similarity"]
-        for r in brute_force_topk(emb, "embedding", query, 200).collect()
-    }
-    for r in got:  # every emitted similarity is the exact cosine
-        assert exact[r["vec_id"]] == r["similarity"], r
-
-    fpath = str(tmp_path / "ivf_fp2")
-    cents_fp = write_ivf_partitioned(emb, fpath, "embedding", id_col="vec_id", n_cells=8)
-    full = ivf_topk_partitioned(
-        spark, fpath, cents_fp, query, 5, vec_col="embedding", id_col="vec_id", n_probe=3
-    ).collect()
-    overlap = {r["vec_id"] for r in got} & {r["vec_id"] for r in full}
-    assert len(overlap) >= 3, (got, full)
-
-
-def test_pq_codebooks_deterministic_and_encoding_matches_numpy(spark):
-    """Codebooks are identical call-to-call, and the executor-side
-    argmin encoding agrees with a driver-side numpy replay on every
-    vector (ties included)."""
-    import numpy as np
-
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        pq_codebooks,
-        write_ivf_partitioned_pq,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").limit(60)
-    b1 = pq_codebooks(emb, "embedding", m=4, k=8)
-    b2 = pq_codebooks(emb, "embedding", m=4, k=8)
-    assert np.array_equal(b1, b2)
-
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        cents, books = write_ivf_partitioned_pq(
-            emb, td + "/ix", "embedding", id_col="vec_id", n_cells=2, m=4, k=8
-        )
-        got = {
-            r["vec_id"]: list(r["codes"])
-            for r in spark.read.parquet(td + "/ix").collect()
-        }
-    rows = emb.collect()
-    ds = 64 // 4
-    for r in rows:
-        v = np.array([float(x) for x in r["embedding"]])
-        n = np.linalg.norm(v)
-        if n == 0:
-            assert r["vec_id"] not in got  # zero vectors excluded
-            continue
-        vn = v / n
-        want = [
-            int(np.argmin(((books[j] - vn[j * ds : (j + 1) * ds]) ** 2).sum(axis=1)))
-            for j in range(4)
-        ]
-        assert got[r["vec_id"]] == want, r["vec_id"]
-
-
 def test_kmeans_integer_replay_and_determinism(spark):
     """kmeans_centroids_int is exact integer math: a pure-Python replay
     of the documented recurrence (unit-norm micro quantization, trunc-
@@ -638,100 +318,20 @@ def test_kmeans_integer_replay_and_determinism(spark):
     assert got == cents
 
 
-def test_kmeans_quantizer_recall_and_balance_vs_sampled(spark):
-    """The full-Lloyd quantizer exists for cell BALANCE: on the skewed
-    clustered fixture its worst cell is materially smaller than the
-    sampled one-step quantizer's (at 100 TB the worst probed partition
-    bounds tail latency), recall at the same probe budget matches the
-    sampled quantizer's while SCANNING no more rows, and at the tighter
-    budget it stays above a hard floor."""
-    import numpy as np
-
-    from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_cell_expr,
-        ivf_centroids,
-        ivf_topk,
-        kmeans_quantizer,
-    )
-
-    rng = np.random.RandomState(7)
-    dim, n_clusters = 16, 8
-    centers = rng.standard_normal((n_clusters, dim)) * 3
-    rows = []
-    i = 0
-    for c in range(n_clusters):
-        for _ in range(150 if c == 0 else 12):  # one dominant dense cluster
-            v = centers[c] + rng.standard_normal(dim) * 0.15
-            rows.append((i, [float(x) for x in v]))
-            i += 1
-    df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    km = kmeans_quantizer(df, "embedding", n_cells=8, iterations=3)
-    samp = ivf_centroids(df, "embedding", n_cells=8)
-    assert km.shape == (8, dim) and not np.isnan(km).any()
-
-    def cell_sizes(cents):
-        return {
-            r["_c"]: r["count"]
-            for r in df.withColumn("_c", ivf_cell_expr("embedding", cents))
-            .groupBy("_c")
-            .count()
-            .collect()
-        }
-
-    km_sizes, samp_sizes = cell_sizes(km), cell_sizes(samp)
-    assert sum(km_sizes.values()) == len(rows)  # every vector assigned
-    assert max(km_sizes.values()) < max(samp_sizes.values())  # balance win
-
-    k = 8
-    queries = [150 + 12 * c for c in range(7)] + [0, 75]
-    exact = {
-        qid: {r["vec_id"] for r in brute_force_topk(df, "embedding", rows[qid][1], k).collect()}
-        for qid in queries
-    }
-
-    def recall_and_scanned(cents, sizes, n_probe):
-        hits = scanned = 0
-        for qid in queries:
-            qv = np.asarray(rows[qid][1], dtype=float)
-            probes = np.argsort(-(cents @ qv))[:n_probe].tolist()
-            scanned += sum(sizes.get(int(p), 0) for p in probes)
-            approx = {
-                r["vec_id"]
-                for r in ivf_topk(
-                    df, "embedding", rows[qid][1], k, id_col="vec_id",
-                    n_cells=8, n_probe=n_probe, centroids=cents,
-                ).collect()
-            }
-            hits += len(exact[qid] & approx)
-        return hits / (k * len(queries)), scanned
-
-    km_r3, km_s3 = recall_and_scanned(km, km_sizes, 3)
-    samp_r3, samp_s3 = recall_and_scanned(samp, samp_sizes, 3)
-    assert km_r3 >= samp_r3  # recall matches the sampled quantizer...
-    assert km_s3 <= samp_s3  # ...without scanning more rows
-    km_r2, _ = recall_and_scanned(km, km_sizes, 2)
-    assert km_r2 >= 0.9  # tight-budget floor
-
-
-def test_pq_codebooks_integer_replay_and_drop_in(spark, tmp_path):
+def test_pq_codebooks_integer_replay_and_drop_in(spark):
     """pq_codebooks_int is exact integer math — a pure-Python replay of
     the documented recurrence (shared micro quantization, per-subspace
     Euclidean argmin with low-cell ties, trunc-div means, NO
-    renormalization) reproduces it bit-for-bit — and the trained float
-    tensor drops into the IVF-PQ write/read path with the self-hit
-    recovered exactly."""
+    renormalization) reproduces it bit-for-bit. The index's PQ tier,
+    which trains with it, is pinned by
+    tests/test_ann_index.py::test_pq_tier_codes_and_adc_topk."""
     import hashlib
     import math
 
     import numpy as np
 
     from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
-        ivf_topk_pq,
-        kmeans_quantizer,
         pq_codebooks_int,
-        pq_quantizer_trained,
-        write_ivf_partitioned_pq,
     )
 
     rng = np.random.RandomState(5)
@@ -773,22 +373,6 @@ def test_pq_codebooks_integer_replay_and_drop_in(spark, tmp_path):
         for (j, c), subs in acc.items():
             books[j][c] = [tdiv(sum(col), len(subs)) for col in zip(*subs)]
     assert got == books
-
-    # -- drop-in to the IVF-PQ index path ------------------------------------
-    cents = kmeans_quantizer(df, "embedding", n_cells=4, iterations=2)
-    fbooks = pq_quantizer_trained(df, "embedding", m=m, k=k, iterations=iters)
-    assert fbooks.shape == (m, k, ds)
-    path = str(tmp_path / "pq_idx")
-    write_ivf_partitioned_pq(
-        df, path, "embedding", id_col="vec_id", n_cells=4, m=m, k=k,
-        centroids=cents, codebooks=fbooks,
-    )
-    q = rows[7][1]
-    top = ivf_topk_pq(
-        spark, path, cents, fbooks, q, df, 5,
-        vec_col="embedding", id_col="vec_id", n_probe=2,
-    ).collect()
-    assert top[0]["vec_id"] == 7 and abs(top[0]["similarity"] - 1.0) < 1e-9
 
 
 def test_knn_ivf_pq_scored_semantics(spark):
