@@ -53,6 +53,11 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
+)
 from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
     _lit_imatrix_sql,
     adc_from_lut_expr,
@@ -89,7 +94,7 @@ class IvfVectorIndex:
         iterations: int = 3,
         vec_col: str = "embedding",
         id_col: str = "vec_id",
-        hash_fn: str = "xxh",
+        hash_fn: HashFamily = XXH,
         pq_m: int | None = None,
         pq_k: int = 16,
         commit_backend=None,
@@ -107,7 +112,7 @@ class IvfVectorIndex:
         self.iterations = iterations
         self.vec_col = vec_col
         self.id_col = id_col
-        self.hash_fn = hash_fn
+        self.hash_fn = checked(hash_fn)
         self.pq_m = pq_m
         self.pq_k = pq_k
         self.store = ParquetStateStore(spark, root, commit_backend=commit_backend)

@@ -10,7 +10,9 @@
 Everything is native DataFrame ops (explode / higher-order functions /
 xxhash64 / bit ops) — no Python in the hot path. The quadratic variants
 take a blocking column; at 100 TB you block (by language, length bucket,
-LSH band) or you don't run.
+LSH band) or you don't run. The hashing operators take a ``hash_fn``
+family member (``operators/hashing.py``): ``XXH`` by default, ``MD5``
+for a run the DuckDB oracle replays.
 """
 
 from __future__ import annotations
@@ -23,9 +25,14 @@ from pyspark.storagelevel import StorageLevel
 from automated_datastore_discovery_with_aws_glue_spark.operators.cache import (
     adopt,
     carry,
-    persistent_rdd_ids,
+    checkpoint_rdd_id,
     rdd_id_releaser,
     release,
+)
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
 )
 from automated_datastore_discovery_with_aws_glue_spark.operators.hot import (
     HOT_POLICIES,
@@ -35,8 +42,6 @@ from automated_datastore_discovery_with_aws_glue_spark.operators.hot import (
 from automated_datastore_discovery_with_aws_glue_spark.operators.rebalance import spread
 from automated_datastore_discovery_with_aws_glue_spark.operators.text import (
     fingerprint,
-    let,
-    md5_hash64,
     normalize_text,
     token_count,
 )
@@ -54,22 +59,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.count(F.lit(1)).alias("dup_count"),
         )
     )
-
-
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the normalized text (whole text as a
-    single shingle when shorter than n words). The word array is
-    let-bound so the split runs once per row, not once per gram."""
-
-    def body(words: Column) -> Column:
-        k = F.size(words)
-        grams = F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i, n)),
-        )
-        return F.when(k >= n, grams).otherwise(F.array(F.concat_ws(" ", words)))
-
-    return F.array_distinct(let(F.split(normalize_text(col), " "), body))
 
 
 def jaccard_pairs(
@@ -118,7 +107,7 @@ def jaccard_pairs(
     """
     num = int(round(threshold * 10000))
     base = (
-        _hashed_shingle_frame(df, id_col, text_col, n, block_col)
+        _shingle_frame(df, id_col, text_col, n, block_col=block_col)
         .withColumn("plen", F.col("sz") - F.ceil(F.col("sz") * F.lit(threshold)).cast("int") + 1)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -158,60 +147,27 @@ def jaccard_pairs(
         .filter(pos_ok)
         .select("id_a", "id_b")
     )
-    sets = base.select("id", "hs", "sz")
-    joined = (
-        cand.join(sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")), "id_b")
-        .withColumn("inter", F.size(F.array_intersect("hs_a", "hs_b")))
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    result = (
-        joined.filter(F.col("inter") * 10000 >= F.lit(num) * union)
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("inter").cast("double") / union, 4).alias("jaccard"),
-        )
-        .distinct()
-    )
-    return adopt(result, base)
+    return adopt(_verified(cand, base, base, threshold).distinct(), base)
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def hashed_shingles(col: Column, n: int = 3) -> Column:
-    """Sorted distinct 64-bit hashes of the word n-grams — computed
-    numerically: hash each word once, then hash each n-window of word
-    hashes (``xxhash64(h_i, h_{i+1}, h_{i+2})``). No shingle string is
-    ever materialized, and distinct/sort run over fixed-width longs
-    instead of variable-length strings. Set cardinalities (and therefore
-    Jaccard) match the string formulation modulo 64-bit collisions.
-
-    The word-hash array is let-bound: a plain Column reference inside the
-    gram lambda would re-execute the whole split+hash tree for every
-    ``element_at`` — O(L^2) work per document instead of O(L)."""
-
-    def body(wh: Column) -> Column:
-        k = F.size(wh)
-        grams = F.transform(
-            F.sequence(F.lit(1), k - n + 1),
-            lambda i: F.xxhash64(*[F.element_at(wh, i + j) for j in range(n)]),
-        )
-        return F.when(k >= n, grams).otherwise(F.array(F.xxhash64(wh)))
-
-    wh_expr = F.transform(F.split(normalize_text(col), " "), lambda w: F.xxhash64(w))
-    return F.sort_array(F.array_distinct(let(wh_expr, body)))
-
-
-def _hashed_shingle_frame(
-    df: DataFrame, id_col: str, text_col: str, n: int, block_col: str | None = None
+def _shingle_frame(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    hash_fn: HashFamily = XXH,
+    *,
+    block_col: str | None = None,
 ) -> DataFrame:
-    """(id[, block], hs, sz): hs = ``hashed_shingles``. Every downstream
-    stage (signatures, prefix index, verification) works on the 8-byte
-    hashes — the text is dropped at the scan. ``spread`` rebalances
-    unsplittable inputs before the CPU-heavy shingling."""
+    """(id[, block], hs, sz): hs = ``hash_fn.shingles`` (``XXH``: sorted
+    8-byte hashes). Every downstream stage (signatures, prefix index,
+    verification) works on the shingle set — the text is dropped at the
+    scan. ``spread`` rebalances unsplittable inputs before the
+    CPU-heavy shingling."""
     cols = [F.col(id_col).alias("id")]
     keep = ["id"]
     if block_col is not None:
@@ -220,23 +176,84 @@ def _hashed_shingle_frame(
     cols.append(F.col(text_col).alias("_t"))
     return (
         spread(df.select(*cols))
-        .select(*keep, hashed_shingles(F.col("_t"), n).alias("hs"))
+        .select(*keep, hash_fn.shingles(F.col("_t"), n).alias("hs"))
         .withColumn("sz", F.size("hs"))
     )
 
 
-def _signature_expr(hs: Column, num_hashes: int) -> Column:
-    """MinHash signature from a hashed-shingle array, fully map-side.
+def _signature_expr(hs: Column, num_hashes: int, hash_fn: HashFamily = XXH) -> Column:
+    """MinHash signature from a shingle array, fully map-side.
 
-    The i-th permutation is ``xxhash64(h, i)`` over the 64-bit shingle
-    hash — an independent mix per i with no modular arithmetic
-    (ANSI-safe), and hashing a fixed-width long instead of re-walking the
-    shingle string per permutation. Computed as a nested higher-order
-    transform inside one projection: NO explode, NO shuffle — the
-    signature stage is embarrassingly parallel at any scale."""
+    The i-th permutation is ``hash_fn.key_hash(h, i)`` — for ``XXH``
+    ``xxhash64(h, i)`` over the 64-bit shingle hash: an independent mix
+    per i with no modular arithmetic (ANSI-safe), hashing a fixed-width
+    long instead of re-walking the shingle string per permutation.
+    Computed as a nested higher-order transform inside one projection:
+    NO explode, NO shuffle — the signature stage is embarrassingly
+    parallel at any scale."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(hs, lambda h: F.xxhash64(h, i))),
+        lambda i: F.array_min(F.transform(hs, lambda h: hash_fn.key_hash(h, i, sep="#"))),
+    )
+
+
+def _band_structs(
+    sig: Column, num_hashes: int, bands: int, hash_fn: HashFamily = XXH
+) -> Column:
+    """``array<struct<band, bucket>>`` of a signature: ``bands`` slices
+    of ``num_hashes // bands`` rows, each keyed by ``hash_fn.band_key``
+    (``XXH`` hashes the long-array slice; ``MD5`` keeps the slice — arrays
+    are hashable join keys, and the slice replays in SQL)."""
+    rows = num_hashes // bands
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bandix: F.struct(
+            bandix.alias("band"),
+            hash_fn.band_key(F.slice(sig, bandix * rows + 1, rows)).alias("bucket"),
+        ),
+    )
+
+
+def _banded(
+    base: DataFrame, num_hashes: int, bands: int, hash_fn: HashFamily = XXH
+) -> DataFrame:
+    """(id, band, bucket) rows of a shingle frame's MinHash signatures —
+    the LSH bucket index every candidate join in the family uses."""
+    sigs = base.select("id", _signature_expr(F.col("hs"), num_hashes, hash_fn).alias("signature"))
+    return sigs.select(
+        "id", F.explode(_band_structs(F.col("signature"), num_hashes, bands, hash_fn)).alias("bb")
+    ).select("id", "bb.band", "bb.bucket")
+
+
+def _verified(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    sides: tuple[str, str] = ("a", "b"),
+) -> DataFrame:
+    """Exact-Jaccard verification of ``(id_a, id_b)`` candidates:
+    ``left`` / ``right`` provide (id, hs, sz) for each side; returns
+    ``(id_a, id_b, jaccard)`` for the pairs clearing ``threshold``.
+    |A∪B| = |A|+|B|-|A∩B|, so no union array materializes, and the
+    threshold compares by integer cross-multiplication — boundary pairs
+    are engine-stable. ``sides`` names the suffixes (``id_l``/``id_r``
+    for a two-table join)."""
+    l, r = sides
+    inter = F.size(F.array_intersect(f"hs_{l}", f"hs_{r}"))
+    union = F.col(f"sz_{l}") + F.col(f"sz_{r}") - inter
+    num = int(round(threshold * 10000))
+
+    def side(frame: DataFrame, s: str) -> DataFrame:
+        return frame.select(
+            F.col("id").alias(f"id_{s}"), F.col("hs").alias(f"hs_{s}"), F.col("sz").alias(f"sz_{s}")
+        )
+
+    return (
+        cand.join(side(left, l), f"id_{l}")
+        .join(side(right, r), f"id_{r}")
+        .filter(inter * 10000 >= F.lit(num) * union)
+        .select(f"id_{l}", f"id_{r}", F.round(inter.cast("double") / union, 4).alias("jaccard"))
     )
 
 
@@ -247,33 +264,14 @@ def minhash_signatures(
     *,
     n: int = 3,
     num_hashes: int = 64,
-    hash_fn: str = "xxhash64",
+    hash_fn: HashFamily = XXH,
 ) -> DataFrame:
     """MinHash signature per document (one shuffle-free projection:
-    shingle -> hash -> per-permutation array_min).
-
-    ``hash_fn='xxhash64'`` is the production path (numeric shingle
-    hashes, ``xxhash64(h, i)`` permutations). ``'md5'`` computes the
-    i-th permutation as the top-15-hex-digit md5 of ``shingle + '#' + i``
-    over the *string* shingles — slower, but the identical computation
-    exists in DuckDB so the differential oracle can replay every
-    signature value (same pattern as ``simhash64``)."""
-    if hash_fn == "md5":
-        def perm(s: Column, i: Column) -> Column:
-            return md5_hash64(F.concat(s, F.lit("#"), i.cast("string")))
-
-        sig = let(
-            word_shingles(F.col("_t"), n),
-            lambda sh: F.transform(
-                F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-                lambda i: F.array_min(F.transform(sh, lambda s: perm(s, i))),
-            ),
-        )
-        return spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))).select(
-            "id", sig.alias("signature")
-        )
-    return _hashed_shingle_frame(df, id_col, text_col, n).select(
-        "id", _signature_expr(F.col("hs"), num_hashes).alias("signature")
+    shingle -> hash -> per-permutation array_min). With ``hash_fn=MD5``
+    every signature value replays in DuckDB."""
+    hash_fn = checked(hash_fn)
+    return _shingle_frame(df, id_col, text_col, n, hash_fn).select(
+        "id", _signature_expr(F.col("hs"), num_hashes, hash_fn).alias("signature")
     )
 
 
@@ -288,19 +286,23 @@ def minhash_lsh_pairs(
     threshold: float = 0.5,
     max_bucket: int | None = None,
     on_hot: str = "drop",
+    hash_fn: HashFamily = XXH,
 ) -> DataFrame:
     """Near-dup pairs via banded LSH + exact-Jaccard verification.
 
     Candidate generation: signatures split into ``bands`` bands of
     ``num_hashes/bands`` rows; docs sharing any band bucket become
-    candidates (equi-join on (band, bucket-hash) — linear shuffle, never
+    candidates (equi-join on (band, bucket) — linear shuffle, never
     all-pairs). Verification recomputes exact shingle Jaccard on the
     candidates only. With 16 bands x 4 rows the S-curve catches
     J >= ~0.5 with high recall.
 
-    The hashed-shingle frame feeds the map-side signature expression and
-    both verification sides — persisted once (sorted hash arrays, never
-    text); signatures need no shuffle at all (see ``_signature_expr``).
+    The shingle frame feeds the map-side signature expression and both
+    verification sides — persisted once (``XXH``: sorted hash arrays,
+    never text); signatures need no shuffle at all (see
+    ``_signature_expr``). With ``hash_fn=MD5`` every hash, band key and
+    shingle replays in DuckDB, so the differential oracle pins the pair
+    set itself — candidates and verification.
 
     ``max_bucket`` mirrors the hot-bucket safety valve of
     ``similarity.lsh_near_dup``: (band, bucket) groups larger than the
@@ -310,24 +312,11 @@ def minhash_lsh_pairs(
     never silent), ``'route'`` emits star candidates to each hot
     group's min-id representative — O(B) per bucket, same exact
     verification."""
+    hash_fn = checked(hash_fn)
     if on_hot not in HOT_POLICIES:
         raise ValueError(f"on_hot must be one of {HOT_POLICIES}, got {on_hot!r}")
-    rows = num_hashes // bands
-    base = _hashed_shingle_frame(df, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = base.select("id", _signature_expr(F.col("hs"), num_hashes).alias("signature"))
-    banded = sigs.select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bandix: F.struct(
-                    bandix.alias("band"),
-                    # xxhash64 hashes the band's long-array slice directly
-                    F.xxhash64(F.slice("signature", bandix * rows + 1, rows)).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    base = _shingle_frame(df, id_col, text_col, n, hash_fn).persist(StorageLevel.MEMORY_AND_DISK)
+    banded = _banded(base, num_hashes, bands, hash_fn)
     extra = None
     cached: list = [base]
     if max_bucket is not None:
@@ -350,117 +339,7 @@ def minhash_lsh_pairs(
     )
     if extra is not None:
         cand = cand.union(extra)
-    cand = cand.distinct()
-    inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    union = F.col("sz_a") + F.col("sz_b") - inter
-    num = int(round(threshold * 10000))
-    result = (
-        cand.join(
-            base.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .filter(inter * 10000 >= F.lit(num) * union)
-        .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
-    )
-    return adopt(result, *cached)
-
-
-def minhash_lsh_pairs_md5(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
-    max_bucket: int | None = None,
-    on_hot: str = "drop",
-) -> DataFrame:
-    """Differential twin of ``minhash_lsh_pairs``: same banded-LSH shape
-    (signature -> band slices -> equi-join -> exact-Jaccard verify), but
-    every hash is the top-15-hex-digit md5 used by ``minhash_signatures
-    (hash_fn='md5')`` — a computation DuckDB reproduces bit-for-bit, so
-    the *pair set itself* is oracle-checkable, not just the signatures.
-    Candidates join on the band's signature slice directly (arrays are
-    hashable join keys); verification runs on distinct string shingles.
-    ``max_bucket``/``on_hot`` are the same hot-bucket valve as the
-    xxhash64 variant (the (band, slice) group is the bucket key).
-
-    The xxhash64 variant stays the production path — numeric shingle
-    hashes and more permutations; this twin exists so the driver's
-    differential gate can pin the full candidate+verify pipeline."""
-    if on_hot not in HOT_POLICIES:
-        raise ValueError(f"on_hot must be one of {HOT_POLICIES}, got {on_hot!r}")
-    rows = num_hashes // bands
-    base = (
-        spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")))
-        .select("id", word_shingles(F.col("_t"), n).alias("sh"))
-        .withColumn("sz", F.size("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    def perm(s: Column, i: Column) -> Column:
-        return md5_hash64(F.concat(s, F.lit("#"), i.cast("string")))
-
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(F.col("sh"), lambda s: perm(s, i))),
-    )
-    banded = base.select("id", sig.alias("signature")).select(
-        "id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bandix: F.struct(
-                    bandix.alias("band"),
-                    F.slice("signature", bandix * rows + 1, rows).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    extra = None
-    cached = [base]
-    if max_bucket is not None:
-        banded, hot, _stats, sizes = split_hot_buckets(
-            banded, ("band", "bucket"), max_bucket,
-            label="minhash_lsh_pairs_md5", policy=on_hot,
-        )
-        cached.append(sizes)
-        if on_hot == "route":
-            extra = (
-                star_reps(hot, ("band", "bucket"))
-                .filter(F.col("id") != F.col("_rep"))
-                .select(F.col("_rep").alias("id_a"), F.col("id").alias("id_b"))
-            )
-    cand = (
-        banded.alias("l")
-        .join(banded.alias("r"), ["band", "bucket"])
-        .filter(F.col("l.id") < F.col("r.id"))
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-    )
-    if extra is not None:
-        cand = cand.union(extra)
-    cand = cand.distinct()
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("sz_a") + F.col("sz_b") - inter
-    num = int(round(threshold * 10000))
-    result = (
-        cand.join(
-            base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), F.col("sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), F.col("sz").alias("sz_b")),
-            "id_b",
-        )
-        .filter(inter * 10000 >= F.lit(num) * union)
-        .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
-    )
+    result = _verified(cand.distinct(), base, base, threshold)
     return adopt(result, *cached)
 
 
@@ -489,35 +368,26 @@ _SIMHASH_EXPR_TMPL = """
         (acc, t) -> acc ^ t
     )
 """
-_SIMHASH_EXPR = _SIMHASH_EXPR_TMPL.format(maxbit=63)
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str, *, hash_fn: str = "xxhash64") -> DataFrame:
+def simhash64(df: DataFrame, id_col: str, text_col: str, *, hash_fn: HashFamily = XXH) -> DataFrame:
     """SimHash per document, fully map-side: hash the distinct tokens,
     then fold the sketch with one higher-order expression. The old
     formulation exploded every token and ran a 64-column SUM aggregate —
     a full shuffle of the token stream plus a giant generated aggregate
     class; this is one shuffle-free projection.
 
-    ``hash_fn='xxhash64'`` is the production path (full 64-bit sketch).
-    ``'md5'`` hashes each token to the top 15 hex digits of its md5 —
-    a 60-bit sketch whose entire computation exists identically in
-    DuckDB, so the differential oracle can replay the sketch math
-    bit-for-bit (same pattern as ``text.winnow_fingerprints``)."""
-    if hash_fn == "md5":
-        width = 60
-        def tok_hash(t: Column) -> Column:
-            return md5_hash64(t)
-    else:
-        width = 64
-        def tok_hash(t: Column) -> Column:
-            return F.xxhash64(t)
-    expr = _SIMHASH_EXPR_TMPL.format(maxbit=width - 1)
+    The sketch has ``hash_fn.simhash_width`` bits: 64 for ``XXH``, 60
+    for ``MD5``, whose token hash is the 60-bit ``md5_hash64`` — with
+    ``MD5`` the differential oracle replays the sketch math bit for
+    bit."""
+    hash_fn = checked(hash_fn)
+    expr = _SIMHASH_EXPR_TMPL.format(maxbit=hash_fn.simhash_width - 1)
     return spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))).select(
         "id",
         F.transform(
             F.array_distinct(F.split(normalize_text(F.col("_t")), " ")),
-            tok_hash,
+            lambda t: hash_fn.key_hash(t),
         ).alias("th"),
     ).select("id", F.expr(expr).alias("simhash"))
 
@@ -623,6 +493,17 @@ def simhash_pairs(
     return adopt(result, *cached)
 
 
+def _gram_keys(
+    df: DataFrame, id_col: str, text_col: str, n: int, hash_fn: HashFamily
+) -> DataFrame:
+    """(id, gh): one row per distinct word ``n``-gram of each document,
+    keyed by ``hash_fn.gram_keys`` — the gram stream the contamination
+    operators match against the benchmark's."""
+    return _shingle_frame(df, id_col, text_col, n, hash_fn).select(
+        "id", F.explode(hash_fn.gram_keys(F.col("hs"))).alias("gh")
+    )
+
+
 def decontaminate(
     train: DataFrame,
     bench: DataFrame,
@@ -630,7 +511,7 @@ def decontaminate(
     text_col: str,
     *,
     n: int = 13,
-    hash_fn: str = "xxhash64",
+    hash_fn: HashFamily = XXH,
     detect_on: DataFrame | None = None,
 ) -> DataFrame:
     """Test-set decontamination (the GPT-3-style pipeline step): drop
@@ -643,13 +524,10 @@ def decontaminate(
     map-side semi-join over the exploded corpus grams (no corpus-sized
     shuffle to find matches); the only corpus-keyed shuffle is the final
     anti-join on contaminated ids, which is bounded by the number of
-    contaminated documents. Gram hashing reuses ``hashed_shingles``
-    (fixed-width longs, no gram strings materialize).
-
-    ``hash_fn='md5'`` computes grams as top-15-hex-digit md5 of the
-    string shingles — the DuckDB-replayable twin (same dual-path design
-    as ``minhash_signatures``); ``'xxhash64'`` is the production path.
-    Returns the surviving ``train`` rows unchanged.
+    contaminated documents. Grams are the family's shingle keys
+    (``XXH``: ``hashed_shingles``, fixed-width longs, no gram strings
+    materialize; ``MD5``: the 60-bit md5 of each string shingle, which
+    DuckDB replays). Returns the surviving ``train`` rows unchanged.
 
     ``detect_on`` (optional) is the frame the contaminated id set is
     COMPUTED from — it must contain every ``train`` row's (id, text)
@@ -660,23 +538,10 @@ def decontaminate(
     cached superset here so the gram explode reads the cache instead of
     re-evaluating the canonical subtree — identical output, one
     evaluation of the expensive side."""
-    if hash_fn == "md5":
-        def grams(df: DataFrame) -> DataFrame:
-            sh = word_shingles(F.col("_t"), n)
-            return (
-                spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")))
-                .select("id", F.explode(sh).alias("g"))
-                .select("id", md5_hash64(F.col("g")).alias("gh"))
-            )
-    else:
-        def grams(df: DataFrame) -> DataFrame:
-            return _hashed_shingle_frame(df, id_col, text_col, n).select(
-                "id", F.explode("hs").alias("gh")
-            )
-
-    bench_grams = grams(bench).select("gh").distinct()
+    hash_fn = checked(hash_fn)
+    bench_grams = _gram_keys(bench, id_col, text_col, n, hash_fn).select("gh").distinct()
     contaminated = (
-        grams(train if detect_on is None else detect_on)
+        _gram_keys(train if detect_on is None else detect_on, id_col, text_col, n, hash_fn)
         .join(F.broadcast(bench_grams), "gh", "left_semi")
         .select(F.col("id").alias(id_col))
         .distinct()
@@ -691,7 +556,7 @@ def decontaminate_bloom(
     text_col: str,
     *,
     n: int = 13,
-    hash_fn: str = "xxhash64",
+    hash_fn: HashFamily = XXH,
     num_bits: int = 8_388_608,
 ) -> DataFrame:
     """:func:`decontaminate` for the regime where the benchmark's gram
@@ -716,20 +581,7 @@ def decontaminate_bloom(
     instead of every gram. Undersizing ``num_bits`` degrades the
     prefilter's selectivity, never the answer (pinned in pytest with an
     absurdly small filter)."""
-    if hash_fn == "md5":
-        def grams(df: DataFrame) -> DataFrame:
-            sh = word_shingles(F.col("_t"), n)
-            return (
-                spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")))
-                .select("id", F.explode(sh).alias("g"))
-                .select("id", md5_hash64(F.col("g")).alias("gh"))
-            )
-    else:
-        def grams(df: DataFrame) -> DataFrame:
-            return _hashed_shingle_frame(df, id_col, text_col, n).select(
-                "id", F.explode("hs").alias("gh")
-            )
-
+    hash_fn = checked(hash_fn)
     def bit_cols(df: DataFrame) -> DataFrame:
         # F.shiftleft only takes a literal shift amount; the per-row
         # shift goes through an expression
@@ -740,14 +592,14 @@ def decontaminate_bloom(
             "shiftleft(CAST(1 AS BIGINT), CAST(pmod(_pos, 64) AS INT)) AS _m",
         ).drop("_pos")
 
-    bench_grams = grams(bench).select("gh").distinct()
+    bench_grams = _gram_keys(bench, id_col, text_col, n, hash_fn).select("gh").distinct()
     bloom = (
         bit_cols(bench_grams)
         .groupBy("_w")
         .agg(F.bit_or("_m").alias("_bits"))
     )
     flagged = (
-        bit_cols(grams(train))
+        bit_cols(_gram_keys(train, id_col, text_col, n, hash_fn))
         .join(F.broadcast(bloom), "_w")
         .filter(F.col("_m").bitwiseAND(F.col("_bits")) != 0)
         .select("id", "gh")
@@ -767,7 +619,7 @@ def contamination_scores(
     text_col: str,
     *,
     n: int = 13,
-    hash_fn: str = "xxhash64",
+    hash_fn: HashFamily = XXH,
 ) -> DataFrame:
     """GRADED test-set contamination: per training document, the
     fraction of its distinct word ``n``-grams that appear anywhere in
@@ -782,25 +634,16 @@ def contamination_scores(
     only corpus-keyed shuffle is the per-doc aggregate of (hits, total)
     pairs of longs. Returns ``(id, n_grams, n_contaminated,
     contamination_frac)`` for every ``train`` row (gram-less docs score
-    0.0). ``hash_fn`` as in :func:`decontaminate` ('md5' = the
-    DuckDB-replayable twin)."""
-    if hash_fn == "md5":
-        def grams(df: DataFrame) -> DataFrame:
-            sh = word_shingles(F.col("_t"), n)
-            return (
-                spread(df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t")))
-                .select("id", F.explode(sh).alias("g"))
-                .select("id", md5_hash64(F.col("g")).alias("gh"))
-            )
-    else:
-        def grams(df: DataFrame) -> DataFrame:
-            return _hashed_shingle_frame(df, id_col, text_col, n).select(
-                "id", F.explode("hs").alias("gh")
-            )
-
-    bench_grams = grams(bench).select("gh").distinct().withColumn("_hit", F.lit(1))
+    0.0). ``hash_fn`` as in :func:`decontaminate`."""
+    hash_fn = checked(hash_fn)
+    bench_grams = (
+        _gram_keys(bench, id_col, text_col, n, hash_fn)
+        .select("gh")
+        .distinct()
+        .withColumn("_hit", F.lit(1))
+    )
     scored = (
-        grams(train)
+        _gram_keys(train, id_col, text_col, n, hash_fn)
         .join(F.broadcast(bench_grams), "gh", "left")
         .groupBy("id")
         .agg(
@@ -994,12 +837,14 @@ def dedup_clusters(
 
     Cache lifecycle: each round's checkpoint blocks are unpersisted as
     soon as the next round materializes (the superseded round's blocks
-    serve no plan); the FINAL round's blocks back the returned frame and
-    are adopted onto it — freed by ``cache.release(result)`` or when the
-    result is garbage-collected. Because the returned plan reads
-    lineage-TRUNCATED checkpoint blocks, any frame derived from it must
-    keep the result alive via ``cache.carry(derived, result)`` — after a
-    release (explicit or GC-backstop) a derived plan cannot recompute.
+    serve no plan) — by the checkpointed frame's own RDD id, so a shared
+    session's other checkpoints survive; the FINAL round's blocks back
+    the returned frame and are adopted onto it — freed by
+    ``cache.release(result)`` or when the result is garbage-collected.
+    Because the returned plan reads lineage-TRUNCATED checkpoint blocks,
+    any frame derived from it must keep the result alive via
+    ``cache.carry(derived, result)`` — after a release (explicit or
+    GC-backstop) a derived plan cannot recompute.
     With ``consume_pairs=True`` (default), the ``pairs`` frame is fully
     consumed here (the label loop is eager) and its operator caches are
     released on exit — re-collecting a ``jaccard_pairs`` result after
@@ -1036,14 +881,13 @@ def dedup_clusters(
     # init = the first propagation round fused into a groupBy (labels are
     # the identity at round 0, so min-over-neighbors needs no join yet):
     # every node starts at min(id, neighbors) — one round fewer in the loop
-    seen = persistent_rdd_ids(sc)
     labels = (
         edges.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("mb"))
         .select("id", F.least("id", "mb").alias("label"))
         .localCheckpoint()
     )
-    own_ids = persistent_rdd_ids(sc) - seen
+    own_ids = {checkpoint_rdd_id(labels)}
     for _ in range(max_rounds):
         nmin = (
             edges.join(labels.select(F.col("id").alias("b"), F.col("label").alias("nb")), "b")
@@ -1053,7 +897,6 @@ def dedup_clusters(
         # change detection rides the update projection — no second join
         # against the previous labels, just a LIMIT-1 probe on the
         # checkpointed result
-        seen = persistent_rdd_ids(sc)
         new = (
             labels.join(nmin, "id", "left")
             .select(
@@ -1063,13 +906,12 @@ def dedup_clusters(
             )
             .localCheckpoint()
         )
-        new_ids = persistent_rdd_ids(sc) - seen
         changed = new.filter("_chg").limit(1).count()
         # the superseded round's checkpoint blocks feed no live plan once
         # `new` is materialized (localCheckpoint is eager) — drop them NOW
         # instead of letting them pile up for the session's lifetime
         rdd_id_releaser(sc, own_ids)()
-        own_ids = new_ids
+        own_ids = {checkpoint_rdd_id(new)}
         labels = new.drop("_chg")
         if changed == 0:
             break

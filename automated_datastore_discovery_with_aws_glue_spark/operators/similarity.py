@@ -36,6 +36,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
+)
 from automated_datastore_discovery_with_aws_glue_spark.operators.hot import (
     HOT_POLICIES,
     split_hot_buckets,
@@ -609,7 +614,7 @@ def _pq_partials_arrow(
 
 
 def quantized_training_base(
-    df: DataFrame, vec_col: str, id_col: str = "vec_id", hash_fn: str = "xxh"
+    df: DataFrame, vec_col: str, id_col: str = "vec_id", hash_fn: HashFamily = XXH
 ) -> DataFrame:
     """The (_id, _qv, _h) frame BOTH quantizer trainers consume:
     spread (the HOF/Arrow per-row work must not serialize on a
@@ -618,13 +623,7 @@ def quantized_training_base(
     codebooks prepares the corpus once — pass it as ``base=`` to
     :func:`kmeans_centroids_int` / :func:`pq_codebooks_int` (the caller
     then owns persist/unpersist)."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.text import md5_hash64
-
-    h = (
-        md5_hash64(F.col(id_col).cast("string"))
-        if hash_fn == "md5"
-        else F.xxhash64(F.col(id_col))
-    )
+    h = checked(hash_fn).key_hash(F.col(id_col))
     return (
         spread(df.select(id_col, vec_col))
         .withColumn("_nrm", sq_norm_expr(vec_col))
@@ -644,7 +643,7 @@ def kmeans_centroids_int(
     n_cells: int = 8,
     iterations: int = 3,
     id_col: str = "vec_id",
-    hash_fn: str = "xxh",
+    hash_fn: HashFamily = XXH,
     assign: str = "arrow",
     base: DataFrame | None = None,
     seed_qvs: list[list[int]] | None = None,
@@ -652,8 +651,8 @@ def kmeans_centroids_int(
     """Train ``n_cells`` centroids with ``iterations`` full Lloyd steps
     over EVERY (non-zero) vector; returns the k x d integer micro-unit
     centroid matrix. Seeds are the n_cells vectors of smallest
-    hash(id) — ``hash_fn='xxh'`` (production) or ``'md5'`` (the
-    DuckDB-replayable twin, `operators/text.py md5_hash64`). Empty and
+    ``hash_fn.key_hash(id)`` — ``XXH`` (production) or ``MD5`` (the
+    DuckDB-replayable family, ``operators/hashing.py``). Empty and
     degenerate (zero-mean) cells keep their previous centroid.
     ``assign`` picks the per-iteration partial-sum backend: ``'arrow'``
     (vectorized int64 matmul — the default; exact-integer math identical
@@ -819,7 +818,7 @@ def pq_codebooks_int(
     k: int = 16,
     iterations: int = 2,
     id_col: str = "vec_id",
-    hash_fn: str = "xxh",
+    hash_fn: HashFamily = XXH,
     assign: str = "arrow",
     base: DataFrame | None = None,
     seed_qvs: list[list[int]] | None = None,

@@ -19,10 +19,11 @@ ships a built-in ``count_min_sketch`` aggregate returning an opaque
 binary; this explicit formulation is the one a pipeline can merge,
 store in the state store, and differentially verify.)
 
-Hashing: ``hash_fn="xxh"`` (default) uses xxhash64 — the fast
-production path; ``"md5"`` uses the repo's 60-bit md5 twin hash
-(``operators.text.md5_hash64`` convention) so a DuckDB oracle replays
-the ENTIRE sketch bit-for-bit, collisions included.
+Hashing: ``hash_fn`` is a family member (``operators/hashing.py``).
+``XXH`` (default) is the fast production family; with ``MD5`` every
+cell is the 60-bit ``md5_hash64`` of ``row || '|' || value``, so a
+DuckDB oracle replays the ENTIRE sketch bit-for-bit, collisions
+included.
 """
 
 from __future__ import annotations
@@ -30,15 +31,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
+)
 
-def _bucket(v: Column, row: Column, width: int, hash_fn: str) -> Column:
-    if hash_fn == "xxh":
-        return F.pmod(F.xxhash64(row, v), F.lit(width)).cast("int")
-    if hash_fn == "md5":
-        keyed = F.concat(row.cast("string"), F.lit("|"), v)
-        h = F.conv(F.md5(keyed.cast("binary")).substr(1, 15), 16, 10).cast("bigint")
-        return F.pmod(h, F.lit(width)).cast("int")
-    raise ValueError(f"unknown hash_fn: {hash_fn}")
+
+def _bucket(v: Column, row: Column, width: int, hash_fn: HashFamily) -> Column:
+    return F.pmod(checked(hash_fn).key_hash(row, v, sep="|"), F.lit(width)).cast("int")
 
 
 def cms_build(
@@ -47,7 +48,7 @@ def cms_build(
     *,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "xxh",
+    hash_fn: HashFamily = XXH,
 ) -> DataFrame:
     """Sketch a column (or expression) into ``(row, bucket, cnt)`` —
     one explode + one hash aggregate; the shuffle carries at most
@@ -78,7 +79,7 @@ def cms_query(
     *,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "xxh",
+    hash_fn: HashFamily = XXH,
 ) -> DataFrame:
     """Point-query frequencies for ``values[value_col]``: min over the
     ``depth`` counters — ``(v, est_n)``, one broadcast-sized join

@@ -13,6 +13,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
+)
+
 #: language -> high-frequency stopwords (tiny embedded lists; the n-gram
 #: heuristic just needs relative evidence, not full dictionaries)
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -47,11 +53,11 @@ def fingerprint(col: Column) -> Column:
 
 def md5_hash64(col: Column) -> Column:
     """Top-15-hex-digit md5 of a string column as a BIGINT — the 60-bit
-    DuckDB-replayable hash every md5 oracle twin shares
-    (``CAST(('0x' || substr(md5(x), 1, 15)) AS BIGINT)`` on the SQL
-    side). ONE definition: a drift in substr width or cast order in any
-    single copy would silently break oracle parity for just that
-    operator."""
+    DuckDB-replayable hash of the ``hashing.MD5`` family and every
+    md5-keyed operator (``CAST(('0x' || substr(md5(x), 1, 15)) AS
+    BIGINT)`` on the SQL side). ONE definition: a drift in substr width
+    or cast order in any single copy would silently break oracle parity
+    for just that operator."""
     return F.conv(F.md5(col.cast("binary")).substr(1, 15), 16, 10).cast("bigint")
 
 
@@ -236,7 +242,7 @@ def let(value: Column, body) -> Column:
 
 
 def winnow_fingerprints(
-    col: Column, *, k: int = 8, w: int = 4, hash_fn: str = "xxhash64"
+    col: Column, *, k: int = 8, w: int = 4, hash_fn: HashFamily = XXH
 ) -> Column:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03):
     hash every character k-gram of the normalized text, slide a window
@@ -248,11 +254,11 @@ def winnow_fingerprints(
     Fully map-side (nested higher-order transforms over one projection);
     no explode, no shuffle. Each stage's array is let-bound (see ``let``)
     so the gram-hash array is computed once per document, not once per
-    window. ``hash_fn='xxhash64'`` is the production path (8-byte
-    hashes); ``'md5'`` selects lexicographic-min over hex digests, which
-    exists identically in DuckDB so the differential oracle can replay
-    the whole computation."""
-    hasher = F.md5 if hash_fn == "md5" else F.xxhash64
+    window. Grams are hashed with ``hash_fn.digest``: ``XXH`` (8-byte
+    hashes) is the production family; ``MD5`` selects lexicographic-min
+    over hex digests, which exists identically in DuckDB so the
+    differential oracle can replay the whole computation."""
+    hasher = checked(hash_fn).digest
 
     def grams(norm: Column) -> Column:
         m = F.length(norm) - k + 1
@@ -396,7 +402,7 @@ def classifier_score(col: Column, *, dim: int = QUALITY_DIM, seed: int = 7) -> C
     folded), and the fold is a sequential ``aggregate`` — same
     evaluation ORDER as the DuckDB twin's list fold, so the float sums
     agree bit-for-bit before rounding. md5 bucketing (not xxhash64)
-    keeps the hash DuckDB-replayable, like every md5 oracle twin."""
+    keeps the hash DuckDB-replayable, like ``hashing.MD5``."""
     weights = F.array(*[F.lit(w) for w in quality_weights(dim, seed)])
     toks = tokens(col)
     grams = F.concat(toks, word_grams(col, 2))
@@ -481,7 +487,7 @@ def weighted_sample_key(id_col: Column, weight_col: Column, *, seed: int = 7) ->
     """Efraimidis–Spirakis (2006) weighted-reservoir priority key: the
     top-k rows by ``u^(1/w)`` — equivalently ``ln(u)/w``, the monotone
     form used here — are a weighted random sample WITHOUT replacement.
-    ``u`` derives deterministically from the seeded md5 twin hash of the
+    ``u`` derives deterministically from the seeded ``md5_hash64`` of the
     id as an exact rational in (0, 1), so the sample is reproducible,
     coordination-free across executors, and DuckDB-replayable. Callers
     order DESC with an id tiebreak and must not emit the key itself

@@ -63,8 +63,9 @@ from pyspark.storagelevel import StorageLevel
 
 from automated_datastore_discovery_with_aws_glue_spark.operators.cache import adopt, release
 from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
-    _hashed_shingle_frame,
-    _signature_expr,
+    _banded,
+    _shingle_frame,
+    _verified,
     dedup_clusters,
 )
 from automated_datastore_discovery_with_aws_glue_spark.state.store import ParquetStateStore
@@ -229,42 +230,6 @@ class CorpusDedupIndex:
         )
         return out, sizes
 
-    def _banded(self, sigs: DataFrame) -> DataFrame:
-        rows = self.num_hashes // self.bands
-        return sigs.select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(self.bands - 1)),
-                    lambda bandix: F.struct(
-                        bandix.cast("int").alias("band"),
-                        F.xxhash64(
-                            F.slice("signature", bandix * rows + 1, rows)
-                        ).alias("bucket"),
-                    ),
-                )
-            ).alias("bb"),
-        ).select("id", "bb.band", "bb.bucket")
-
-    def _verified(self, cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
-        """Exact-Jaccard filter of (id_a, id_b) candidates; ``left`` /
-        ``right`` provide (id, hs, sz) for each side."""
-        inter = F.size(F.array_intersect("hs_a", "hs_b"))
-        union = F.col("sz_a") + F.col("sz_b") - inter
-        num = int(round(self.threshold * 10000))
-        return (
-            cand.join(
-                left.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")),
-                "id_a",
-            )
-            .join(
-                right.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")),
-                "id_b",
-            )
-            .filter(inter * 10000 >= F.lit(num) * union)
-            .select("id_a", "id_b")
-        )
-
     # -- API ---------------------------------------------------------------
 
     def ingest(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -282,7 +247,7 @@ class CorpusDedupIndex:
         side is broadcast against the index scans, which assumes
         batch << corpus (the delta shape) — a bulk load approaching
         corpus size should go through the batch operators instead."""
-        base = _hashed_shingle_frame(docs, id_col, text_col, self.n).persist(
+        base = _shingle_frame(docs, id_col, text_col, self.n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
 
@@ -309,13 +274,12 @@ class CorpusDedupIndex:
             ).persist(StorageLevel.MEMORY_AND_DISK)
         else:
             base_new = base
-        sigs = base_new.select(
-            "id", _signature_expr(F.col("hs"), self.num_hashes).alias("signature")
-        )
         # persist: the self-join (both sides) and keep_banded all consume
         # the banded frame; each un-persisted evaluation would re-run the
         # signature pass (and, with an index, the stored-id anti-join)
-        banded_new = self._banded(sigs).persist(StorageLevel.MEMORY_AND_DISK)
+        banded_new = _banded(base_new, self.num_hashes, self.bands).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
 
         # within-batch: self-join candidates -> verify -> components ->
         # min-id canonical (the batch operators' semantics). Fast path
@@ -330,8 +294,10 @@ class CorpusDedupIndex:
             .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
             .distinct()
         )
-        nn_pairs = self._verified(nn_cand, base_new, base_new).persist(
-            StorageLevel.MEMORY_AND_DISK
+        nn_pairs = (
+            _verified(nn_cand, base_new, base_new, self.threshold)
+            .select("id_a", "id_b")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         clusters = None
         if nn_pairs.isEmpty():
@@ -374,7 +340,7 @@ class CorpusDedupIndex:
             no_cand = no_cand.persist(StorageLevel.MEMORY_AND_DISK)
             old_ids = no_cand.select(F.col("id_b").alias("id")).distinct()
             old_side = self._pruned_old_side(stored_docs, old_ids)
-            dup_vs_index = self._verified(no_cand, base_new, old_side).select(
+            dup_vs_index = _verified(no_cand, base_new, old_side, self.threshold).select(
                 F.col("id_a").alias("id")
             ).distinct()
             final_keep = batch_keep.join(dup_vs_index, "id", "left_anti")
@@ -467,9 +433,10 @@ class CorpusDedupIndex:
         same candidate/verify economics as :meth:`ingest`."""
         if not self.store.exists(BUCKETS):
             return self.spark.createDataFrame([], "id_a long, id_b long, jaccard double")
-        base = _hashed_shingle_frame(docs, id_col, text_col, self.n)
-        sigs = base.select("id", _signature_expr(F.col("hs"), self.num_hashes).alias("signature"))
-        banded = self._banded(sigs).persist(StorageLevel.MEMORY_AND_DISK)
+        base = _shingle_frame(docs, id_col, text_col, self.n)
+        banded = _banded(base, self.num_hashes, self.bands).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         stored_side, sizes = self._pruned_stored_side(banded, "corpus-index-probe")
         cand = (
             stored_side.alias("o")
@@ -480,21 +447,7 @@ class CorpusDedupIndex:
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
         old_ids = cand.select(F.col("id_b").alias("id")).distinct()
         old_side = self._pruned_old_side(self.store.read(DOCS), old_ids)
-        inter = F.size(F.array_intersect("hs_a", "hs_b"))
-        union = F.col("sz_a") + F.col("sz_b") - inter
-        num = int(round(self.threshold * 10000))
-        out = (
-            cand.join(
-                base.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a"), F.col("sz").alias("sz_a")),
-                "id_a",
-            )
-            .join(
-                old_side.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b"), F.col("sz").alias("sz_b")),
-                "id_b",
-            )
-            .filter(inter * 10000 >= F.lit(num) * union)
-            .select("id_a", "id_b", F.round(inter.cast("double") / union, 4).alias("jaccard"))
-        )
+        out = _verified(cand, base, old_side, self.threshold)
         adopt(out, banded, cand, *( [sizes] if sizes is not None else [] ))
         return out
 
@@ -531,11 +484,10 @@ class CorpusDedupIndex:
         canon = dedup_canonical(docs, pairs, id_col)
         out = canon.localCheckpoint()
         release(canon)
-        base = _hashed_shingle_frame(out, id_col, text_col, self.n).persist(
+        base = _shingle_frame(out, id_col, text_col, self.n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        sigs = base.select("id", _signature_expr(F.col("hs"), self.num_hashes).alias("signature"))
-        banded = self._banded(sigs)
+        banded = _banded(base, self.num_hashes, self.bands)
         # same commit order as ingest (BUCKETS then DOCS): a crash
         # between the overwrites leaves new BUCKETS over old DOCS —
         # candidates against vanished ids drop at the shingle join, and
@@ -610,8 +562,9 @@ def incr_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the daily delta — the second ingest is the number that must stay
     O(batch + candidates) as the index grows. Returns the canonical id
     set (equal to the one-shot batch dedup of the full corpus, pinned by
-    pytest). Rows-only for the driver: the index hashes with xxhash64;
-    the md5 twin chain (dedup_minhash_lsh_md5) pins the math in-window."""
+    pytest). Rows-only for the driver: the index hashes with ``XXH``;
+    dedup_minhash_lsh_md5 runs the same banding and verification with
+    ``MD5`` and pins the math in-window."""
     import shutil
     import tempfile
 

@@ -16,6 +16,7 @@ from automated_datastore_discovery_with_aws_glue_spark.operators import cache as
 from automated_datastore_discovery_with_aws_glue_spark.operators import dedup as D
 from automated_datastore_discovery_with_aws_glue_spark.operators import similarity as S
 from automated_datastore_discovery_with_aws_glue_spark.operators import text as TX
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5
 from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
 
 # -- shared SQL fragments (DuckDB) ------------------------------------------
@@ -24,7 +25,7 @@ _SQL_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 _SQL_WORDS = f"string_split({_SQL_NORM}, ' ')"
 
 #: distinct word 3-gram shingles of a pre-split `words` list — the SQL
-#: twin of ``operators.dedup.word_shingles(n=3)``
+#: twin of ``operators.hashing.word_shingles(n=3)``
 _SQL_GRAMS3 = """list_distinct(
                    CASE WHEN len(words) >= 3
                         THEN list_transform(generate_series(1, len(words) - 2),
@@ -141,13 +142,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checked banded-LSH pair pipeline: md5 permutation hashes
-    regenerate identically in DuckDB, so the candidate join *and* the
-    exact-Jaccard verification are both pinned by the differential gate
-    (``dedup_minhash_lsh`` keeps the faster xxhash64 production path)."""
+    """Oracle-checked banded-LSH pairs: ``minhash_lsh_pairs`` with the
+    ``MD5`` hash family regenerates identically in DuckDB, so the
+    candidate join *and* the exact-Jaccard verification are both pinned
+    by the differential gate (``dedup_minhash_lsh`` runs it with XXH)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs_md5(
-        docs, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5
+    pairs = D.minhash_lsh_pairs(
+        docs, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5, hash_fn=MD5
     )
     return C.carry(pairs.orderBy("id_a", "id_b"), pairs)
 
@@ -282,11 +283,11 @@ def _near_dup_pairs(
                       100 TB throughput path — candidate volume scales
                       with colliding near-dups, never with all
                       shared-shingle pairs.
-    - ``'lsh_md5'`` — the same banded-LSH shape with md5 permutation
-                      hashes (``D.minhash_lsh_pairs_md5``): every hash
+    - ``'lsh_md5'`` — the same operator with 16 permutations in 8 bands
+                      and ``hash_fn=MD5``: every hash
                       replays in DuckDB, so the WHOLE composition stays
                       differential-oracle-checkable. Query-layer
-                      default; identical plan shape to ``'lsh'``.
+                      default.
     - ``'ppjoin'``  — exact prefix-filtered set-similarity join
                       (``D.jaccard_pairs``): guaranteed-complete pairs
                       for compliance-grade dedup; intrinsically
@@ -308,18 +309,14 @@ def _near_dup_pairs(
     if candidates == "ppjoin":
         blocked = df.withColumn("_blk", F.lit(1))
         return D.jaccard_pairs(blocked, "doc_id", "text", "_blk", n=n, threshold=threshold)
-    if candidates == "lsh":
-        # the 100 TB path also carries the hot-bucket valve: boilerplate-
-        # degenerate (band, bucket) groups above the cap star-route to the
-        # group representative (on_hot='route' keeps components connected
-        # for the downstream clustering) instead of going quadratic
-        return D.minhash_lsh_pairs(
-            df, "doc_id", "text", n=n, threshold=threshold,
-            max_bucket=max_bucket, on_hot=on_hot,
-        )
-    return D.minhash_lsh_pairs_md5(
-        df, "doc_id", "text", n=n, num_hashes=16, bands=8, threshold=threshold,
-        max_bucket=max_bucket, on_hot=on_hot,
+    # both LSH strategies carry the hot-bucket valve: boilerplate-
+    # degenerate (band, bucket) groups above the cap star-route to the
+    # group representative (on_hot='route' keeps components connected
+    # for the downstream clustering) instead of going quadratic
+    layout = {} if candidates == "lsh" else dict(num_hashes=16, bands=8, hash_fn=MD5)
+    return D.minhash_lsh_pairs(
+        df, "doc_id", "text", n=n, threshold=threshold,
+        max_bucket=max_bucket, on_hot=on_hot, **layout,
     )
 
 
@@ -453,9 +450,9 @@ def corpus_clean_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_clean_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-path composition: xxhash64 MinHash-LSH candidates
-    (rows-only — xxhash64 has no DuckDB twin; the identical-shape
-    ``corpus_clean`` lsh_md5 default is the oracle-checked proof)."""
+    """Production-path composition: ``XXH`` MinHash-LSH candidates
+    (rows-only — xxhash64 has no DuckDB twin; the ``corpus_clean``
+    lsh_md5 default, the same operator with ``MD5``, is the proof)."""
     return corpus_clean(spark, sf_dir, candidates="lsh")
 
 
@@ -499,8 +496,8 @@ def _sql_ppjoin_pairs(src: str) -> str:
 def _sql_md5_lsh_pairs(src: str, *, num_hashes: int = 16, band_rows: int = 2) -> str:
     """CTE chain ending in ``p(id_a, id_b)``: banded md5-MinHash-LSH
     candidates + exact-Jaccard verify of ``src`` (needs doc_id, text) —
-    the twin of ``D.minhash_lsh_pairs_md5(num_hashes=16, bands=8,
-    threshold=0.5)``."""
+    the SQL replay of ``D.minhash_lsh_pairs(num_hashes=16, bands=8,
+    threshold=0.5, hash_fn=MD5)``."""
     return f"""w AS (SELECT doc_id, {_SQL_WORDS} AS words FROM {src}),
     s AS (SELECT doc_id, {_SQL_GRAMS3} AS sh FROM w),
     sig AS (
@@ -907,10 +904,10 @@ def doc_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints per document (k=8 char-grams, window w=4),
     reduced to (count, md5-of-sorted-set digest) so the result is one
     row per doc while still pinning every selected fingerprint value.
-    Uses the md5 gram-hash variant — DuckDB replays the identical
+    Runs with the ``MD5`` hash family — DuckDB replays the identical
     computation for the differential oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    fps = TX.winnow_fingerprints(F.col("text"), k=8, w=4, hash_fn="md5")
+    fps = TX.winnow_fingerprints(F.col("text"), k=8, w=4, hash_fn=MD5)
     pair = TX.let(
         fps,
         lambda v: F.struct(F.size(v).alias("n"), F.md5(F.concat_ws("", v)).alias("d")),
@@ -1180,13 +1177,13 @@ def emb_canonical_oracle_sql(**kw) -> str:
     """
 
 def dedup_simhash_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SimHash sketch itself, oracle-checked bit-for-bit: the md5
-    token-hash variant (60-bit) exists identically in DuckDB, so the
-    differential gate pins every sketch value — the strong twin of the
-    rows-only ``dedup_simhash`` pair query (whose xxhash64 path has no
-    DuckDB equivalent)."""
+    """The SimHash sketch itself, oracle-checked bit-for-bit: with the
+    ``MD5`` hash family (60-bit token hashes) it exists identically in
+    DuckDB, so the differential gate pins every sketch value — the
+    strong twin of the rows-only ``dedup_simhash`` pair query (whose
+    ``XXH`` run has no DuckDB equivalent)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.simhash64(docs, "doc_id", "text", hash_fn="md5").select(
+    return D.simhash64(docs, "doc_id", "text", hash_fn=MD5).select(
         F.col("id").alias("doc_id"), "simhash"
     ).orderBy("doc_id")
 
@@ -1209,13 +1206,13 @@ DEDUP_SIMHASH_SKETCH_SQL = f"""
 
 
 def dedup_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signature values, oracle-checked bit-for-bit: the md5
-    permutation-hash variant (16 perms over word 3-gram shingles) exists
+    """MinHash signature values, oracle-checked bit-for-bit: with the
+    ``MD5`` hash family (16 perms over word 3-gram shingles) they exist
     identically in DuckDB — the strong twin of the rows-only
-    ``dedup_minhash_lsh`` pair query (whose xxhash64 path has no DuckDB
+    ``dedup_minhash_lsh`` pair query (whose ``XXH`` run has no DuckDB
     equivalent). One row per (doc, permutation)."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=16, hash_fn="md5")
+    sigs = D.minhash_signatures(docs, "doc_id", "text", n=3, num_hashes=16, hash_fn=MD5)
     return (
         sigs.select(F.col("id").alias("doc_id"), F.posexplode("signature").alias("_p", "minhash"))
         .select("doc_id", F.col("_p").cast("bigint").alias("perm"), "minhash")
@@ -1347,10 +1344,9 @@ PARA_DEDUP_SQL = r"""
 # ---------------------------------------------------------------------------
 
 def _seeded_hash(idcol: F.Column, seed: str) -> F.Column:
-    """Deterministic 60-bit hash of (seed, id) — top-15 hex digits of the
-    md5, the same DuckDB-replayable idiom the minhash md5 twin uses."""
-    key = F.concat(F.lit(seed + "#"), idcol.cast("string"))
-    return F.conv(F.md5(key.cast("binary")).substr(1, 15), 16, 10).cast("bigint")
+    """Deterministic 60-bit hash of ``seed || '#' || id``: the ``MD5``
+    family's key hash, which DuckDB replays."""
+    return MD5.key_hash(F.lit(seed), idcol, sep="#")
 
 
 def _seeded_hash_sql(expr: str, seed: str) -> str:
@@ -1543,7 +1539,7 @@ def corpus_prepare(
         "doc_id",
         "text",
         n=3,
-        hash_fn="md5",
+        hash_fn=MD5,
         detect_on=kept.filter(F.col("source") != "src1"),
     )
     bucket = _seeded_hash(F.col("doc_id"), "split") % 1000
@@ -1608,14 +1604,14 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``src1`` slice as the benchmark/eval set and every other source as
     the training corpus; drop training docs sharing any word 3-gram with
     the benchmark (3 instead of the production 13 — the synthetic docs
-    are short). Uses the md5 gram twin so DuckDB replays the identical
-    gram keys; the xxhash64 production path is pinned by the same-math
-    recall relationship tested in pytest."""
+    are short). Runs with the ``MD5`` hash family so DuckDB replays the
+    identical gram keys; the ``XXH`` production run is pinned by the
+    same-math recall relationship tested in pytest."""
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("source") == "src1")
     train = docs.filter(F.col("source") != "src1")
     return (
-        D.decontaminate(train, bench, "doc_id", "text", n=3, hash_fn="md5")
+        D.decontaminate(train, bench, "doc_id", "text", n=3, hash_fn=MD5)
         .select("doc_id", "source")
         .orderBy("doc_id")
     )
@@ -1648,13 +1644,13 @@ def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded contamination scores (``D.contamination_scores``): per
     training doc (source <> 'src1'), the fraction of its distinct word
     3-grams that appear in the 'src1' benchmark slice — rank/flag
-    instead of the boolean `corpus_decontaminate` drop. md5 gram twin
-    for the oracle; xxhash64 is the production path."""
+    instead of the boolean `corpus_decontaminate` drop. ``MD5`` hash
+    family for the oracle; ``XXH`` is the production family."""
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("source") == "src1")
     train = docs.filter(F.col("source") != "src1")
     return (
-        D.contamination_scores(train, bench, "doc_id", "text", n=3, hash_fn="md5")
+        D.contamination_scores(train, bench, "doc_id", "text", n=3, hash_fn=MD5)
         .orderBy("doc_id")
     )
 
@@ -2479,7 +2475,7 @@ def corpus_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = docs.filter(F.col("source") != "src1")
     return (
         D.decontaminate_bloom(
-            train, bench, "doc_id", "text", n=3, hash_fn="md5",
+            train, bench, "doc_id", "text", n=3, hash_fn=MD5,
             num_bits=1_048_576,
         )
         .select("doc_id", "source")
@@ -2601,8 +2597,8 @@ def fuzzy_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-keyed (+500000) with the first token dropped, the classic
     "same record, mangled text" linkage shape. Banded-LSH candidates
     (left buckets equi-joined to right buckets, never |L|x|R|), exact
-    shingle-Jaccard verification, md5 twin so the oracle replays
-    signatures, candidates, AND verification."""
+    shingle-Jaccard verification, ``MD5`` hash family so the oracle
+    replays signatures, candidates, AND verification."""
     from automated_datastore_discovery_with_aws_glue_spark.operators.fuzzy import fuzzy_join
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2627,7 +2623,7 @@ def fuzzy_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         left, feed,
         left_id="doc_id", right_id="feed_id",
         left_text="text", right_text="feed_text",
-        n=3, num_hashes=16, bands=8, threshold=0.5, hash_fn="md5",
+        n=3, num_hashes=16, bands=8, threshold=0.5, hash_fn=MD5,
     )
     return C.carry(pairs.orderBy("id_l", "id_r"), pairs)
 
@@ -2729,15 +2725,15 @@ def knn_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer micro-units (unit-norm floor-quantized vectors, truncating
     integer means, mul-div-floor renormalization — FMA-safe), so the
     oracle replays all three iterations bit-for-bit, DuckDB's `//`
-    matching Spark's `div`/Java truncation. md5-seeded twin of the
-    xxhash64 production path (`operators/ann.py IvfVectorIndex`);
+    matching Spark's `div`/Java truncation. Seeded with the ``MD5``
+    hash family (`operators/ann.py IvfVectorIndex` uses ``XXH``);
     output = the final centroid matrix unnested to atomic (cell, pos, c)
     rows."""
     from automated_datastore_discovery_with_aws_glue_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = S.kmeans_centroids_int(
-        emb, "embedding", n_cells=8, iterations=3, id_col="vec_id", hash_fn="md5"
+        emb, "embedding", n_cells=8, iterations=3, id_col="vec_id", hash_fn=MD5
     )
     rows = [
         (cell, pos, int(v))
@@ -2858,13 +2854,13 @@ def knn_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`operators/similarity.py pq_codebooks_int`). PQ means are plain
     integer trunc-divs (no renormalization — codebooks approximate
     subvectors, not directions), so the oracle replays both iterations
-    with zero float steps. md5 twin of the xxhash64 production path
-    (`operators/ann.py IvfVectorIndex`)."""
+    with zero float steps. Seeded with the ``MD5`` hash family
+    (`operators/ann.py IvfVectorIndex` uses ``XXH``)."""
     from automated_datastore_discovery_with_aws_glue_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
     books = S.pq_codebooks_int(
-        emb, "embedding", m=8, k=8, iterations=2, id_col="vec_id", hash_fn="md5"
+        emb, "embedding", m=8, k=8, iterations=2, id_col="vec_id", hash_fn=MD5
     )
     rows = [
         (j, cell, pos, int(v))
@@ -2986,9 +2982,9 @@ def corpus_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the emb_ivf_join pattern): previously the trainer derived its own
     # internal base and the assignment re-ran the scan+norm+quantize
     # projection from the parquet table a second time
-    tbase = S.quantized_training_base(emb, "embedding", "vec_id", "md5").persist()
+    tbase = S.quantized_training_base(emb, "embedding", "vec_id", MD5).persist()
     cents = S.kmeans_centroids_int(
-        emb, "embedding", n_cells=4, iterations=2, id_col="vec_id", hash_fn="md5",
+        emb, "embedding", n_cells=4, iterations=2, id_col="vec_id", hash_fn=MD5,
         base=tbase,
     )
     # the interpreted-HOF assignment is the per-row cost: ONE pass over
@@ -3131,8 +3127,8 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     L2 to the final top-10 — all as ONE batch plan (r11).
     Every number is an exact integer, so DuckDB replays training,
     probe selection, code assignment, ADC, and re-rank bit-for-bit.
-    md5 twin of the xxhash64 production path (`operators/ann.py
-    IvfVectorIndex`)."""
+    Seeded with the ``MD5`` hash family (`operators/ann.py
+    IvfVectorIndex` uses ``XXH``)."""
     from pyspark.sql import Window
 
     m, kk, n_cells, n_probe = 8, 8, 4, 2
@@ -3142,7 +3138,7 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # own base and ran its own seed job, and the scoring projection
     # re-ran the scan+quantize a third time. Seeds share one hash-order
     # prefix collect (the IvfVectorIndex.build pattern).
-    tbase = S.quantized_training_base(emb, "embedding", "vec_id", "md5").persist()
+    tbase = S.quantized_training_base(emb, "embedding", "vec_id", MD5).persist()
     seed_qvs = [
         list(r["_qv"])
         for r in tbase.orderBy("_h", "_id")
@@ -3152,11 +3148,11 @@ def knn_ivf_pq_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     cents = S.kmeans_centroids_int(
         emb, "embedding", n_cells=n_cells, iterations=2, id_col="vec_id",
-        hash_fn="md5", base=tbase, seed_qvs=seed_qvs,
+        hash_fn=MD5, base=tbase, seed_qvs=seed_qvs,
     )
     books = S.pq_codebooks_int(
         emb, "embedding", m=m, k=kk, iterations=2, id_col="vec_id",
-        hash_fn="md5", base=tbase, seed_qvs=seed_qvs,
+        hash_fn=MD5, base=tbase, seed_qvs=seed_qvs,
     )
     if not cents or not books:  # empty / all-zero corpus: nothing to score
         tbase.unpersist()
@@ -3328,14 +3324,14 @@ def ann_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its own internal base and the report pass re-ran the scan + norm +
     # quantize projection from the parquet table a second time
     emb = load_table(spark, sf_dir, "embeddings")
-    tbase = S.quantized_training_base(emb, "embedding", "vec_id", "md5").persist()
+    tbase = S.quantized_training_base(emb, "embedding", "vec_id", MD5).persist()
     cents = S.kmeans_centroids_int(
         emb,
         "embedding",
         n_cells=4,
         iterations=2,
         id_col="vec_id",
-        hash_fn="md5",
+        hash_fn=MD5,
         base=tbase,
     )
     if not cents:  # empty / all-zero corpus: no cells to report
@@ -3448,7 +3444,7 @@ def emb_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trainer consumes (ADVICE r10): one scan sizes the cells over
     # exactly the rows that participate (zero-norm vectors excluded),
     # instead of a second full-table count that included them.
-    tbase = S.quantized_training_base(emb, "embedding", "vec_id", "md5").persist()
+    tbase = S.quantized_training_base(emb, "embedding", "vec_id", MD5).persist()
     n_cells = _emb_join_cells(tbase.count())
     cents = S.kmeans_centroids_int(
         emb,
@@ -3456,7 +3452,7 @@ def emb_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=n_cells,
         iterations=2,
         id_col="vec_id",
-        hash_fn="md5",
+        hash_fn=MD5,
         base=tbase,
     )
     if not cents:  # empty / all-zero corpus: no blocks, no pairs
@@ -3601,7 +3597,7 @@ def knn_index_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="q_ann_ix_adc_")
     try:
         ix = IvfVectorIndex(
-            spark, root, n_cells=4, iterations=2, hash_fn="md5", pq_m=8, pq_k=8
+            spark, root, n_cells=4, iterations=2, hash_fn=MD5, pq_m=8, pq_k=8
         )
         ix.build(emb)
         rows = ix.topk_batch(
@@ -3646,7 +3642,7 @@ def knn_index_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     qlocal = spark.createDataFrame(qrows, qframe.schema)
     root = tempfile.mkdtemp(prefix="q_ann_ix_exact_")
     try:
-        ix = IvfVectorIndex(spark, root, n_cells=4, iterations=2, hash_fn="md5")
+        ix = IvfVectorIndex(spark, root, n_cells=4, iterations=2, hash_fn=MD5)
         ix.build(emb)
         rows = ix.topk_batch(qlocal, 10, n_probe=2, mode="exact").collect()
     finally:
@@ -3729,7 +3725,7 @@ def emb_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes (the emb_ivf_join pattern): one corpus scan sizes the
     # cells AND materializes the trainers' input, instead of a separate
     # full-table count job ahead of the build's own base derivation
-    tbase = S.quantized_training_base(emb, "embedding", "vec_id", "md5").persist()
+    tbase = S.quantized_training_base(emb, "embedding", "vec_id", MD5).persist()
     n_nz = tbase.count()
     if n_nz == 0:
         tbase.unpersist()
@@ -3737,7 +3733,7 @@ def emb_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="q_ann_ix_join_")
     try:
         ix = IvfVectorIndex(
-            spark, root, n_cells=_emb_join_cells(n_nz), iterations=2, hash_fn="md5"
+            spark, root, n_cells=_emb_join_cells(n_nz), iterations=2, hash_fn=MD5
         )
         ix.build(emb, _base=tbase)
         incoming = emb.filter(F.col("vec_id") % 7 == 0).select(
@@ -3954,7 +3950,7 @@ def ann_drift_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=4,
         iterations=2,
         id_col="vec_id",
-        hash_fn="md5",
+        hash_fn=MD5,
     )
     if not cents:  # empty / all-zero corpus: no batches to report
         return spark.createDataFrame(

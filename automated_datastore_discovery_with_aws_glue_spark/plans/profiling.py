@@ -597,13 +597,14 @@ def prof_approx_distinct_sql() -> str:
 
 def prof_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via a count-min sketch over the documents token
-    stream (``operators.sketch`` — md5 twin hashing, so DuckDB replays
-    the ENTIRE sketch including its collisions): the exact top-20 words
-    with their exact counts, the sketch's estimates, and the
-    over-count. ``est_n >= exact_n`` always (one-sided CMS error); a
+    stream (``operators.sketch`` with the ``MD5`` hash family, so DuckDB
+    replays the ENTIRE sketch including its collisions): the exact
+    top-20 words with their exact counts, the sketch's estimates, and
+    the over-count. ``est_n >= exact_n`` always (one-sided CMS error); a
     width of 512 against thousands of distinct tokens forces real
     collisions, so the over-counts are live evidence the estimate path
     is measured, not echoed."""
+    from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5
     from automated_datastore_discovery_with_aws_glue_spark.operators.sketch import cms_build, cms_query
     from automated_datastore_discovery_with_aws_glue_spark.operators.text import tokens
     from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
@@ -611,7 +612,7 @@ def prof_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth, width = 4, 512
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(F.explode(tokens(F.col("text"))).alias("w")).filter(F.col("w") != "")
-    sketch = cms_build(words, "w", depth=depth, width=width, hash_fn="md5")
+    sketch = cms_build(words, "w", depth=depth, width=width, hash_fn=MD5)
     exact_top = (
         words.groupBy("w")
         .agg(F.count(F.lit(1)).alias("exact_n"))
@@ -620,7 +621,7 @@ def prof_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     est = cms_query(
         sketch, exact_top.select(F.col("w").alias("v")),
-        depth=depth, width=width, hash_fn="md5",
+        depth=depth, width=width, hash_fn=MD5,
     )
     return (
         exact_top.join(est, exact_top["w"] == est["v"])

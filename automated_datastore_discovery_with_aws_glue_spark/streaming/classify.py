@@ -27,6 +27,11 @@ from automated_datastore_discovery_with_aws_glue_spark.operators.classify import
     classification_from_counts,
     classify_columns_counts,
 )
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import (
+    XXH,
+    HashFamily,
+    checked,
+)
 from automated_datastore_discovery_with_aws_glue_spark.state.store import ParquetStateStore
 
 _COLS = ("columnName", "entity", "n_matched", "n_values")
@@ -175,7 +180,7 @@ def make_cms_sink(
     *,
     depth: int = 4,
     width: int = 512,
-    hash_fn: str = "xxh",
+    hash_fn: HashFamily = XXH,
 ):
     """``foreachBatch`` sink for ingest-time FREQUENCY monitoring: each
     micro-batch's count-min sketch (``operators.sketch.cms_build``)
@@ -185,6 +190,8 @@ def make_cms_sink(
     sketch stays ≤ depth x width rows forever; query it any time with
     ``cms_query`` for "how often has this value arrived so far"."""
     from automated_datastore_discovery_with_aws_glue_spark.operators.sketch import cms_build, cms_merge
+
+    hash_fn = checked(hash_fn)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():

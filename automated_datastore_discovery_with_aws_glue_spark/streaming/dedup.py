@@ -23,9 +23,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
+    _band_structs,
     _signature_expr,
-    hashed_shingles,
 )
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import hashed_shingles
 from automated_datastore_discovery_with_aws_glue_spark.operators.text import fingerprint
 
 
@@ -210,17 +211,10 @@ def stream_minhash_dedup(
     the precision-restoring exact-Jaccard verify batch-side. The dedup
     state keys are unchanged (band, bucket).
     """
-    rows = num_hashes // bands
     sig = _signature_expr(
         hashed_shingles(F.coalesce(F.col(text_col), F.lit("")), n), num_hashes
     )
-    banded = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band"),
-            F.xxhash64(F.slice(F.col("_sig"), b * rows + 1, rows)).alias("bucket"),
-        ),
-    )
+    banded = _band_structs(F.col("_sig"), num_hashes, bands)
     sentinel = F.struct(
         F.lit(-1).alias("band"),
         # unique per (doc, ts, content): dedups ONLY a true replay —
@@ -337,7 +331,6 @@ def make_verified_minhash_sink(
 
     Driver-side work is O(messages per batch) bookkeeping; all text
     comparison stays distributed."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import hashed_shingles as _hs
     from automated_datastore_discovery_with_aws_glue_spark.state.store import (
         ConcurrentWriteError,
         ParquetStateStore,
@@ -401,8 +394,8 @@ def make_verified_minhash_sink(
                     F.first(F.col("h.text")).alias("h_text"),
                 )
             )
-            a = F.array_distinct(_hs(F.col("c_text"), n))
-            b = F.array_distinct(_hs(F.col("h_text"), n))
+            a = F.array_distinct(hashed_shingles(F.col("c_text"), n))
+            b = F.array_distinct(hashed_shingles(F.col("h_text"), n))
             jac = F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
             dropped_fps = (
                 pairs.filter(jac >= jaccard_threshold).select("fp").distinct()

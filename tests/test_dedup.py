@@ -13,8 +13,8 @@ from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
     minhash_signatures,
     simhash64,
     simhash_pairs,
-    word_shingles,
 )
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5, XXH, word_shingles
 from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
 from tests.conftest import SF_DIR
 
@@ -183,6 +183,36 @@ def test_dedup_clusters_raises_on_non_convergence(spark):
     assert all(v == 0 for v in got.values())
 
 
+def test_dedup_clusters_release_spares_foreign_checkpoints(spark, monkeypatch):
+    """On a shared session another pipeline can localCheckpoint while a
+    label-propagation round checkpoints. dedup_clusters must release
+    only its own round blocks: an unpersisted local checkpoint cannot be
+    recomputed, so freeing a foreign one breaks the other pipeline."""
+    from automated_datastore_discovery_with_aws_glue_spark.operators.cache import release
+    from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import dedup_clusters
+
+    frame_cls = type(spark.range(1))
+    original = frame_cls.localCheckpoint
+    foreign = []
+
+    def checkpoint_beside_a_foreign_one(self, *args, **kwargs):
+        out = original(self, *args, **kwargs)
+        foreign.append(original(spark.range(len(foreign) + 3), eager=True))
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint_beside_a_foreign_one)
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"])
+    out = dedup_clusters(pairs, driver_max_pairs=None)
+    got = {r["id"]: r["cluster_id"] for r in out.collect()}
+    release(out)
+    monkeypatch.undo()
+
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert len(foreign) >= 2  # the initial labels plus at least one round
+    for i, f in enumerate(foreign):
+        assert [r["id"] for r in f.collect()] == list(range(i + 3))
+
+
 def test_dedup_canonical_keeps_one_per_cluster(spark):
     from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import dedup_canonical
 
@@ -266,7 +296,6 @@ def test_corpus_clean_lsh_default_invariants(spark):
     plus recall: the default must remove ~every exact near-dup the
     PPJoin mode finds (banded-LSH recall at J>=0.5 is high but
     probabilistic, so the bound is >=, not equality)."""
-    from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import minhash_lsh_pairs_md5
     from automated_datastore_discovery_with_aws_glue_spark.operators.text import text_stats
     from automated_datastore_discovery_with_aws_glue_spark.plans.llm_pipeline import corpus_clean
 
@@ -277,8 +306,8 @@ def test_corpus_clean_lsh_default_invariants(spark):
     kept_ids = {r["doc_id"] for r in kept.collect()}
     assert out_ids <= kept_ids
     # every LSH-detected near-dup pair lost at least one side
-    lsh_pairs = minhash_lsh_pairs_md5(
-        kept, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5
+    lsh_pairs = minhash_lsh_pairs(
+        kept, "doc_id", "text", n=3, num_hashes=16, bands=8, threshold=0.5, hash_fn=MD5
     ).collect()
     assert lsh_pairs, "fixture should contain LSH-detectable near-dups"
     for p in lsh_pairs:
@@ -326,8 +355,8 @@ def test_dedup_clusters_matches_union_find(spark, cap):
 
 def test_decontaminate_paths_agree_and_drop_overlaps(spark):
     """A training doc sharing any word n-gram with the benchmark drops;
-    clean docs survive; the xxhash64 production path and the
-    DuckDB-replayable md5 twin select the identical survivor set."""
+    clean docs survive; the ``XXH`` production family and the
+    DuckDB-replayable ``MD5`` family select the identical survivor set."""
     from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import decontaminate
 
     bench = spark.createDataFrame(
@@ -341,7 +370,7 @@ def test_decontaminate_paths_agree_and_drop_overlaps(spark):
         ],
         ["doc_id", "text"],
     )
-    for fn in ("xxhash64", "md5"):
+    for fn in (XXH, MD5):
         kept = sorted(
             r["doc_id"]
             for r in decontaminate(train, bench, "doc_id", "text", n=3, hash_fn=fn).collect()
@@ -368,7 +397,7 @@ def test_contamination_scores_hand_computed_and_paths_agree(spark):
         ],
         ["doc_id", "text"],
     )
-    for fn in ("xxhash64", "md5"):
+    for fn in (XXH, MD5):
         got = {
             r["doc_id"]: (r["n_grams"], r["n_contaminated"], r["contamination_frac"])
             for r in contamination_scores(

@@ -1,6 +1,6 @@
 """Cross-table fuzzy-join semantics (`operators/fuzzy.py`) — the sf0.01
-oracle run pins the md5 twin end-to-end; these exercise the xxhash64
-PRODUCTION path and the operator contract (cross-table topology, exact
+oracle run pins the ``MD5`` hash family end-to-end; these exercise the
+``XXH`` PRODUCTION family and the operator contract (cross-table topology, exact
 verification, hot-bucket valve)."""
 
 from __future__ import annotations

@@ -269,13 +269,12 @@ def test_index_hot_bucket_valve_routes_to_representative(spark, tmp_path):
     # most one row per (band, bucket) group
     base_probe = _docs(spark, [(100, BASE)])
     from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
-        _hashed_shingle_frame,
-        _signature_expr,
+        _banded,
+        _shingle_frame,
     )
 
-    base = _hashed_shingle_frame(base_probe, "doc_id", "text", valved.n)
-    sigs = base.select("id", _signature_expr(F.col("hs"), valved.num_hashes).alias("signature"))
-    banded = valved._banded(sigs)
+    base = _shingle_frame(base_probe, "doc_id", "text", valved.n)
+    banded = _banded(base, valved.num_hashes, valved.bands)
     stored_side, sizes = valved._pruned_stored_side(banded, "test-valve")
     per_group = stored_side.groupBy("band", "bucket").count().agg(F.max("count")).collect()[0][0]
     assert per_group == 1

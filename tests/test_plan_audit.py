@@ -91,3 +91,63 @@ def test_every_plan_function_is_registered_or_called():
     assert plans and not offenders, (
         f"plan functions neither registered in queries() nor called: {offenders}"
     )
+
+
+def test_hash_choice_lives_in_the_family_module():
+    """The hash family is decided in ``operators/hashing.py`` only: no
+    other module branches on ``hash_fn`` by comparing it to a string,
+    and no module re-types the 60-bit md5 formula
+    ``conv(md5(...).substr(1, 15), 16, 10)`` outside
+    ``text.md5_hash64``. An AST walk; nothing is planned or run."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(entrymod.__file__).resolve().parent / (
+        "automated_datastore_discovery_with_aws_glue_spark"
+    )
+
+    def name_of(node: ast.AST) -> str | None:
+        if isinstance(node, ast.Name):
+            return node.id
+        if isinstance(node, ast.Attribute):
+            return node.attr
+        return None
+
+    def has_str(node: ast.AST) -> bool:
+        return any(
+            isinstance(n, ast.Constant) and isinstance(n.value, str) for n in ast.walk(node)
+        )
+
+    def is_md5_formula(node: ast.AST) -> bool:
+        if not (isinstance(node, ast.Call) and name_of(node.func) == "conv" and node.args):
+            return False
+        sub = node.args[0]
+        return (
+            isinstance(sub, ast.Call)
+            and isinstance(sub.func, ast.Attribute)
+            and sub.func.attr == "substr"
+            and isinstance(sub.func.value, ast.Call)
+            and name_of(sub.func.value.func) == "md5"
+        )
+
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "operators/hashing.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        definition = set()
+        if rel == "operators/text.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "md5_hash64":
+                    definition = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Compare):
+                operands = [node.left, *node.comparators]
+                if any(name_of(o) == "hash_fn" for o in operands) and any(
+                    has_str(o) for o in operands if name_of(o) != "hash_fn"
+                ):
+                    offenders.append(f"{rel}:{node.lineno} compares hash_fn to a string")
+            if is_md5_formula(node) and id(node) not in definition:
+                offenders.append(f"{rel}:{node.lineno} copies the md5_hash64 formula")
+    assert not offenders, offenders

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5
 from automated_datastore_discovery_with_aws_glue_spark.plans.profiling import prof_histogram
 from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
 
@@ -79,7 +80,7 @@ def test_cms_one_sided_error_and_merge(spark):
 
     rows = [(f"k{i % 50}",) for i in range(2000)] + [("hot",)] * 500
     df = spark.createDataFrame(rows, ["v"]).withColumn("idx", F.monotonically_increasing_id())
-    kw = dict(depth=4, width=16, hash_fn="md5")  # narrow: forced collisions
+    kw = dict(depth=4, width=16, hash_fn=MD5)  # narrow: forced collisions
 
     sketch = cms_build(df, "v", **kw)
     exact = {r["v"]: r["n"] for r in df.groupBy("v").agg(F.count("*").alias("n")).collect()}

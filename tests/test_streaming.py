@@ -658,10 +658,8 @@ def test_stream_minhash_verified_sink_precision(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import (
-        _signature_expr,
-        hashed_shingles,
-    )
+    from automated_datastore_discovery_with_aws_glue_spark.operators.dedup import _signature_expr
+    from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import hashed_shingles
     from automated_datastore_discovery_with_aws_glue_spark.streaming.dedup import (
         make_verified_minhash_sink,
         stream_minhash_dedup,
@@ -1029,12 +1027,13 @@ def test_cms_sink_streaming_frequencies_with_replay_guard(spark, tmp_path):
     everything ingested; a replayed micro-batch merges nothing."""
     import pyspark.sql.functions as F
 
+    from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5
     from automated_datastore_discovery_with_aws_glue_spark.operators.sketch import cms_build, cms_query
     from automated_datastore_discovery_with_aws_glue_spark.state.store import ParquetStateStore
     from automated_datastore_discovery_with_aws_glue_spark.streaming.classify import make_cms_sink
 
     store = ParquetStateStore(spark, str(tmp_path / "state"))
-    kw = dict(depth=4, width=64, hash_fn="md5")
+    kw = dict(depth=4, width=64, hash_fn=MD5)
     sink = make_cms_sink(store, "freq", "v", **kw)
 
     b0 = spark.createDataFrame([("a",)] * 30 + [("b",)] * 5, ["v"])

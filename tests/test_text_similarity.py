@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from automated_datastore_discovery_with_aws_glue_spark.operators.hashing import MD5, XXH
 from automated_datastore_discovery_with_aws_glue_spark.operators.similarity import (
     blocked_near_dup,
     brute_force_topk,
@@ -278,10 +279,10 @@ def test_kmeans_integer_replay_and_determinism(spark):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
 
     got = kmeans_centroids_int(
-        df, "embedding", n_cells=3, iterations=2, hash_fn="md5"
+        df, "embedding", n_cells=3, iterations=2, hash_fn=MD5
     )
     assert got == kmeans_centroids_int(
-        df, "embedding", n_cells=3, iterations=2, hash_fn="md5"
+        df, "embedding", n_cells=3, iterations=2, hash_fn=MD5
     )
 
     # -- pure-Python replay ------------------------------------------------
@@ -339,7 +340,7 @@ def test_pq_codebooks_integer_replay_and_drop_in(spark):
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     m, k, ds, iters = 4, 3, 4, 2
 
-    got = pq_codebooks_int(df, "embedding", m=m, k=k, iterations=iters, hash_fn="md5")
+    got = pq_codebooks_int(df, "embedding", m=m, k=k, iterations=iters, hash_fn=MD5)
 
     # -- pure-Python replay --------------------------------------------------
     def md5_64(s):
@@ -414,7 +415,7 @@ def test_ann_cell_balance_consistency(spark):
     got = {r["cell"]: r for r in ann_cell_balance(spark, sf).collect()}
     emb = load_table(spark, sf, "embeddings")
     cents = S.kmeans_centroids_int(
-        emb, "embedding", n_cells=4, iterations=2, id_col="vec_id", hash_fn="md5"
+        emb, "embedding", n_cells=4, iterations=2, id_col="vec_id", hash_fn=MD5
     )
     truth = {
         r["cell"]: r["n"]
@@ -493,7 +494,7 @@ def test_arrow_training_backend_bit_equals_hof(spark):
     from automated_datastore_discovery_with_aws_glue_spark.sources.readers import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    for hf in ("md5", "xxh"):
+    for hf in (MD5, XXH):
         a = kmeans_centroids_int(
             emb, "embedding", n_cells=5, iterations=2, hash_fn=hf, assign="arrow"
         )
@@ -502,10 +503,10 @@ def test_arrow_training_backend_bit_equals_hof(spark):
         )
         assert a == h
     pa = pq_codebooks_int(
-        emb, "embedding", m=8, k=6, iterations=2, hash_fn="md5", assign="arrow"
+        emb, "embedding", m=8, k=6, iterations=2, hash_fn=MD5, assign="arrow"
     )
     ph = pq_codebooks_int(
-        emb, "embedding", m=8, k=6, iterations=2, hash_fn="md5", assign="hof"
+        emb, "embedding", m=8, k=6, iterations=2, hash_fn=MD5, assign="hof"
     )
     assert pa == ph
 
